@@ -142,57 +142,6 @@ def main() -> None:
     # state; min-of-N is the standard way to measure the plan itself
     import gc
 
-    # Interleaved drift sentinel (r13, VERDICT r12 task 5): one single-shot
-    # rep of a code-frozen control every 8 headline queries, emitted as
-    # `ctrl_series` (wall/ref ratios in sequence order). A drift WINDOW —
-    # the r12 failure mode where one control read 0.82× its ref while
-    # another read 1.45× in the same session — is now localizable to the
-    # batch of queries it poisoned instead of only showing up as a
-    # suite-wide spread. The sentinel reps run OUTSIDE every timed window
-    # (between queries, gc'd like any other) and only ADD a key to the
-    # JSON line; per-query timings, the query set, and the methodology are
-    # unchanged. q_join_nn is the sentinel: mid-cost (~1.1 s), join-family,
-    # already warmed early in the sequence by its own headline slot.
-    CTRL_SENTINEL = "q_join_nn"
-    CTRL_SENTINEL_REF = 1.122  # = controls_ref[q_join_nn] below
-    ctrl_series: list[float] = []
-
-    timings: dict[str, float] = {}
-    second_best: dict[str, float] = {}
-    for qi, name in enumerate(HEADLINE):
-        if qi > 0 and qi % 8 == 0:
-            t0 = time.time()
-            df = QUERIES[CTRL_SENTINEL](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            ctrl_series.append(round((time.time() - t0) / CTRL_SENTINEL_REF, 2))
-            df = None
-            gc.collect()
-        runs: list[float] = []
-        for _ in range(2):
-            t0 = time.time()
-            df = QUERIES[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        # the two runs disagreeing >30% means one of them caught host
-        # noise (firecracker neighbors) — a third rep settles it for the
-        # noisy minority without tripling total wall for the stable rest
-        if min(runs) > 0.3 and max(runs) > 1.3 * min(runs):
-            t0 = time.time()
-            df = QUERIES[name](spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.time() - t0)
-        timings[name] = round(min(runs), 3)
-        second_best[name] = round(sorted(runs)[1], 3)
-        # drop the plan refs and collect BETWEEN queries: localCheckpoint
-        # blocks and broadcasts are ContextCleaner-freed only once the
-        # Python DataFrame objects are GC'd, and 60+ queries of retained
-        # state inflate late-session timings up to 2.6x vs a fresh session
-        # (measured r04: q_corpus_stats_score 4.0s shared vs 1.5s fresh).
-        # The cleanup cost sits OUTSIDE the timed window.
-        df = None
-        gc.collect()
-
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     # Host-drift controls: r08's +19% total needed manual isolated control
     # runs to adjudicate as firecracker-neighbor noise (PLANS.md drift
     # protocol). These five queries are code-frozen (touching their code
@@ -224,6 +173,57 @@ def main() -> None:
         "q_copurchase": 1.228,         # r07 1.26  / r08 1.32  → 1.290 − 0.062
         "q_stream_hourly": 0.717,      # r07 0.67  / r08 0.86  → 0.765 − 0.048
     }
+
+    # Interleaved drift sentinel (r13, VERDICT r12 task 5): one single-shot
+    # rep of a code-frozen control every 8 headline queries, emitted as
+    # `ctrl_series` (wall/ref ratios in sequence order). A drift WINDOW —
+    # the r12 failure mode where one control read 0.82× its ref while
+    # another read 1.45× in the same session — is now localizable to the
+    # batch of queries it poisoned instead of only showing up as a
+    # suite-wide spread. The sentinel reps run OUTSIDE every timed window
+    # (between queries, gc'd like any other) and only ADD a key to the
+    # JSON line; per-query timings, the query set, and the methodology are
+    # unchanged. q_join_nn is the sentinel: mid-cost (~1.1 s), join-family,
+    # already warmed early in the sequence by its own headline slot.
+    CTRL_SENTINEL = "q_join_nn"
+    ctrl_series: list[float] = []
+
+    timings: dict[str, float] = {}
+    second_best: dict[str, float] = {}
+    for qi, name in enumerate(HEADLINE):
+        if qi > 0 and qi % 8 == 0:
+            t0 = time.time()
+            df = QUERIES[CTRL_SENTINEL](spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+            ctrl_series.append(round((time.time() - t0) / controls_ref[CTRL_SENTINEL], 2))
+            df = None
+            gc.collect()
+        runs: list[float] = []
+        for _ in range(2):
+            t0 = time.time()
+            df = QUERIES[name](spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+            runs.append(time.time() - t0)
+        # the two runs disagreeing >30% means one of them caught host
+        # noise (firecracker neighbors) — a third rep settles it for the
+        # noisy minority without tripling total wall for the stable rest
+        if min(runs) > 0.3 and max(runs) > 1.3 * min(runs):
+            t0 = time.time()
+            df = QUERIES[name](spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+            runs.append(time.time() - t0)
+        timings[name] = round(min(runs), 3)
+        second_best[name] = round(sorted(runs)[1], 3)
+        # drop the plan refs and collect BETWEEN queries: localCheckpoint
+        # blocks and broadcasts are ContextCleaner-freed only once the
+        # Python DataFrame objects are GC'd, and 60+ queries of retained
+        # state inflate late-session timings up to 2.6x vs a fresh session
+        # (measured r04: q_corpus_stats_score 4.0s shared vs 1.5s fresh).
+        # The cleanup cost sits OUTSIDE the timed window.
+        df = None
+        gc.collect()
+
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     ratios = sorted(
         timings[c] / ref for c, ref in controls_ref.items() if c in timings and ref > 0
     )
@@ -281,10 +281,12 @@ def main() -> None:
             c: v[0] for c, v in out["controls"].items()
         }
         line = json.dumps(out, separators=(",", ":"))
-    if len(line) > 1900:
+    while len(line) > 1900 and out["ctrl_series"]:
         # last resort: thin the drift timeline to every other sample
-        # (coarser but still a timeline) before anything else gives
-        out["ctrl_series"] = ctrl_series[::2]
+        # (coarser but still a timeline), repeatedly, down to dropping it,
+        # before anything else gives
+        series = out["ctrl_series"]
+        out["ctrl_series"] = series[::2] if len(series) > 1 else []
         line = json.dumps(out, separators=(",", ":"))
     print(line)
 

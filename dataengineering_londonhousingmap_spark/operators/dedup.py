@@ -1050,7 +1050,7 @@ def exact_dup_quotient_multi(specs) -> list[tuple[DataFrame, QuotientMapping]]:
             s = _quotient_stats_frame(m, specs[i][1]).select(
                 F.lit(i).alias("__q_side"), "__mx", "__dup", "__null_ids"
             )
-            stats_u = s if stats_u is None else stats_u.unionByName(s)  # union-audited: every branch is a DIFFERENT input's one-row aggregate — no shared un-materialized subtree to replay
+            stats_u = s if stats_u is None else stats_u.unionByName(s)  # union-audited: each branch is one input's one-row aggregate and scans that input at most once; inputs that share an un-materialized subtree (complementary filters of one scan) replay it once per branch, the same total scan cost as one job per input
         stats = {r["__q_side"]: r for r in stats_u.collect()}
         for i, (df, id_col, _, _) in enumerate(specs):
             if (stats[i]["__null_ids"] or 0) > 0:

@@ -2156,31 +2156,32 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState): per-user
-    30-minute inactivity-gap sessions. Deterministic emission — closed
-    sessions only — so a batch gaps-and-islands SQL (minus each user's
-    trailing open session) is an exact oracle."""
-    from .streaming.incremental import read_events_stream, run_stream_to_memory, sessionize_stream
+    """Streaming sessionization: per-user 30-minute inactivity-gap sessions
+    on Catalyst's MergingSessions exec, emitting CLOSED sessions only (a
+    successor event or the final watermark closed them), so a batch
+    gaps-and-islands SQL minus each user's trailing open session is an
+    exact oracle.
+
+    Complete output mode, then the ``closed_sessions`` filter: append mode
+    evicts a session only when the watermark passes it, so it misses
+    sessions a successor closed inside the final horizon (at sf0.01, 9515
+    rows vs the oracle's 9520). Complete mode keeps every session in state,
+    which suits this finite feed (q_stream_session_native takes the same
+    posture). An unbounded production feed runs the same
+    ``sessionize_stream`` in append mode instead: bounded state, sessions
+    emitted as the watermark closes them."""
+    from .streaming.incremental import (
+        closed_sessions,
+        read_events_stream,
+        run_stream_to_memory,
+        sessionize_stream,
+    )
 
     events = read_events_stream(spark, sf_dir).select("user_id", "ts", "value")
-    sessions = sessionize_stream(events, gap_minutes=30)
-    # the Python stateful function wants task parallelism more than it
-    # fears state-store count — and the r11 10x profile shows it scales
-    # with cores: 8/16/32 state partitions ran 29.5/19.6/11.5s on the
-    # same 1M-event micro-batch (addBatch is ~99% of wall; harness
-    # start/stop <0.2s, Arrow batch size a wash). Track core count
-    # locally; clusters size it via the statePartitions session knob.
-    # defaultParallelism is ONLY safe to read here because this is the
-    # local-harness path: on a cluster it can be tiny before executors
-    # register, and state partitioning freezes at the first checkpoint —
-    # the shipped cluster_conf sets statePartitions='session', which
-    # overrides this arg so state parallelism follows the cluster's own
-    # shuffle-partition setting (ADVICE r11).
-    out = run_stream_to_memory(
-        sessions, "q_stream_sessions_sink", "append",
-        state_partitions=spark.sparkContext.defaultParallelism,
+    sessions = run_stream_to_memory(
+        sessionize_stream(events, gap_minutes=30), "q_stream_sessions_sink", "complete"
     )
-    return out.select(
+    return closed_sessions(sessions, gap_minutes=30).select(
         "user_id", "session_start", "session_end", "n_events",
         F.round("total_value", 6).alias("total_value"),
     )
@@ -5592,9 +5593,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_stream_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows ON THE STREAMING ENGINE (F.session_window +
     watermark under readStream) — completes the sessionization trio:
-    q_stream_sessions is the custom applyInPandasWithState operator,
-    q_session_window the batch-native merge; this is Catalyst's own
-    streaming MergingSessions exec with watermark-bounded state. Complete
+    q_stream_sessions keeps only the CLOSED sessions of the same exec (its
+    operator contract), q_session_window is the batch-native merge; this
+    emits every session with its session_window bounds. Complete
     output mode on the finite feed → the emitted table equals the batch
     merge, so the batch islands SQL is an exact oracle."""
     from .streaming.incremental import read_events_stream, run_stream_to_memory
@@ -6667,6 +6668,9 @@ RE_VERIFY_FRONT: dict[str, int] = {
     "q_split_leakage": 9,
     "q_containment": 9,
     "q_dedup_agreement": 9,
+    # r14: q_stream_sessions moved from the pandas state machine onto the
+    # native session window + closed_sessions filter (oracle unchanged)
+    "q_stream_sessions": 14,
 }
 
 

@@ -317,121 +317,68 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-SESSION_OUT = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start", T.TimestampType()),
-        T.StructField("session_end", T.TimestampType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-SESSION_STATE = T.StructType(
-    [
-        T.StructField("start", T.TimestampType()),
-        T.StructField("end", T.TimestampType()),
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ]
-)
-
-
 def sessionize_stream(
     events: DataFrame,
     gap_minutes: int = 30,
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    per-user inactivity-gap sessionization (the streaming upgrade of the
-    batch marker-sessionization R5).
+    """Per-user inactivity-gap sessionization on Catalyst's streaming
+    MergingSessions exec (``F.session_window`` under a watermark): the
+    streaming upgrade of the batch marker-sessionization R5, with no Python
+    worker on the ingest path.
 
-    A session closes when the next event for the key is more than
-    ``gap_minutes`` later (emitted immediately) or when the event-time
-    watermark passes session end + gap (state timeout — bounded state, the
-    100 TB requirement). Emission semantics are deterministic: every session
-    whose successor arrived is emitted; each key's trailing open session
-    stays in state until timeout, so a finite run emits all-but-last session
-    per key (the batch oracle mirrors exactly that).
+    One row per session: first and last event time, event count and the
+    NULL-as-zero value total. In append mode a session is emitted once the
+    watermark passes its end + gap, so state stays bounded on an unbounded
+    feed. Complete mode re-emits every session in state, open ones
+    included; ``closed_sessions`` then keeps exactly the closed ones.
 
-    MEASURED scale posture (r12, AB_SESSIONIZE_r12.json — interleaved
-    best-of-2, one session, tools/ab_sessionize.py): the native
-    ``F.session_window`` formulation (q_stream_session_native) runs the
-    same 30-minute gap semantics 3.46× faster at sf0.1 and 3.70× faster
-    on the 10× replication — there is NO crossover where this operator
-    wins on wall clock; the Python-per-group boundary is the whole gap
-    (r11 profile: ~99% of wall is stateful addBatch). Use this operator
-    only for semantics session_window can't express (per-session custom
-    logic/payloads, immediate successor-closed emission); use the native
-    exec for plain gap sessionization at any scale.
+    Native rather than a pandas state machine: the latter ran the same
+    gap semantics 3.46× slower at sf0.1 (AB_SESSIONIZE_r12.json), ~99% of
+    it in the Python stateful addBatch (STREAM_PROFILE_r11.json).
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    import pandas as pd
-
-    gap_s = gap_minutes * 60
-
-    def fn(key, pdfs, state: GroupState):
-        sessions = []
-        if state.exists:
-            start, end, n, total = state.get
-        else:
-            start, end, n, total = None, None, 0, 0.0
-
-        rows = pd.concat(list(pdfs)) if not state.hasTimedOut else pd.DataFrame()
-        if len(rows):
-            # vectorized gaps-and-islands: carried-over state is prepended
-            # as a pseudo-session so batch boundaries don't split sessions
-            rows = rows.sort_values("ts")
-            ts = rows["ts"].reset_index(drop=True)
-            val = rows["value"].fillna(0.0).reset_index(drop=True)
-            prev_end = ts.shift(1)
-            if start is not None:
-                prev_end.iloc[0] = end
-            new_sess = prev_end.isna() | ((ts - prev_end).dt.total_seconds() > gap_s)
-            sess_id = new_sess.cumsum()
-            g = pd.DataFrame({"ts": ts, "val": val, "sid": sess_id}).groupby("sid")
-            agg = g.agg(s=("ts", "min"), e=("ts", "max"), n=("ts", "size"), t=("val", "sum"))
-            first = agg.iloc[0]
-            if start is not None and not new_sess.iloc[0]:
-                # first batch-session continues the carried one
-                agg.iloc[0] = (start, first["e"], first["n"] + n, first["t"] + total)
-            elif start is not None:
-                sessions.append((key[0], start, end, n, round(total, 6)))
-            for s, e, cnt, tot in agg.iloc[:-1].itertuples(index=False):
-                sessions.append((key[0], s, e, int(cnt), round(float(tot), 6)))
-            start, end, n, total = (
-                agg.iloc[-1]["s"], agg.iloc[-1]["e"],
-                int(agg.iloc[-1]["n"]), float(agg.iloc[-1]["t"]),
-            )
-
-        if state.hasTimedOut:
-            if start is not None:
-                sessions.append((key[0], start, end, n, round(total, 6)))
-            state.remove()
-        else:
-            state.update((start, end, n, total))
-            # close the open session once the watermark passes end + gap
-            wm = state.getCurrentWatermarkMs()
-            timeout_ms = max(
-                int(end.timestamp() * 1000) + gap_s * 1000, wm + 1
-            )
-            state.setTimeoutTimestamp(timeout_ms)
-        yield pd.DataFrame(
-            sessions,
-            columns=["user_id", "session_start", "session_end", "n_events", "total_value"],
-        )
-
     return (
         events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=SESSION_OUT,
-            stateStructType=SESSION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes"))
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.coalesce("value", F.lit(0.0))).alias("total_value"),
         )
+        .drop("session_window")
+    )
+
+
+def closed_sessions(
+    sessions: DataFrame,
+    gap_minutes: int = 30,
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """The CLOSED sessions of a finished ``sessionize_stream`` run (a batch
+    filter over its complete-mode sink table). A session is closed when
+    its user has a later session (a successor event closed it), or when
+    the final watermark has passed ``session_end + gap``. The final
+    watermark is Spark's own: max event time − ``watermark``. So only each
+    user's trailing session younger than that horizon stays open. A NULL
+    ``user_id`` is no known user, so as under SQL equality no session is
+    its successor and only the watermark closes NULL-user sessions.
+
+    The final watermark is a one-row global aggregate run once as a scalar
+    subquery: an unpartitioned window would pull every session onto one
+    task."""
+    from pyspark.sql import Window
+
+    final_wm = sessions.select(
+        F.max("session_end") - F.expr(f"INTERVAL {watermark}")
+    ).scalar()
+    return (
+        sessions.withColumn("__last", F.max("session_start").over(Window.partitionBy("user_id")))
+        .filter(
+            (F.col("user_id").isNotNull() & (F.col("session_start") < F.col("__last")))
+            | (F.col("session_end") + F.expr(f"INTERVAL {gap_minutes} MINUTES") < final_wm)
+        )
+        .drop("__last")
     )
 
 
@@ -656,7 +603,6 @@ def run_stream_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str,
-    state_partitions: int = 8,
 ) -> DataFrame:
     """Drive a finite streaming DataFrame to completion against a memory
     sink and return the materialized result (test/driver harness — a real
@@ -666,7 +612,7 @@ def run_stream_to_memory(
     # best-effort replace of a stale sink view from a prior run —
     # dropTempView returns False (never raises) when the view is absent
     spark.catalog.dropTempView(name)
-    with _few_state_partitions(spark, n=state_partitions):
+    with _few_state_partitions(spark):
         q = (
             df.writeStream.format("memory")
             .queryName(name)

@@ -57,6 +57,9 @@ SENSITIVE = [
     # run end-to-end against the adversarial data
     "q_stream_hourly",
     "q_stream_late",
+    # NULL user_id rows form their own session group; NULL values take the
+    # coalesce-to-zero path of the session total
+    "q_stream_sessions",
 ]
 
 

@@ -8,7 +8,8 @@ implemented deliberately instead of staying forgotten behind the stub.
 
 The three documented environment limits (VERDICT r10 "What's missing"):
   1. google.protobuf broken → transformWithStateInPandas unusable
-     (streaming/incremental.py uses applyInPandasWithState instead).
+     (no streaming operator needs Python arbitrary state today:
+     sessionize_stream runs on the native session window).
   2. PIL absent → compressed image codecs stubbed
      (multimodal.py decode_image; the binary Netpbm path is a real,
      dependency-free decoder and is NOT a stub).
@@ -22,10 +23,11 @@ import pytest
 
 
 def test_protobuf_canary_for_transform_with_state():
-    """Spark 4's transformWithStateInPandas is the intended replacement
-    for applyInPandasWithState in sessionize_stream / dedup_stream, but
-    its state server imports google.protobuf, which this container lacks
-    and cannot pip-install (.claude/skills/verify/SKILL.md). Skips while
+    """Spark 4's transformWithStateInPandas is the arbitrary-state API
+    for any future Python stateful stream operator, but its state server
+    imports google.protobuf, which this container lacks and cannot
+    pip-install (see the verify skill notes). No such operator exists
+    today (sessionize_stream and dedup_stream are native). Skips while
     that holds; fails loudly the day protobuf becomes importable."""
     try:
         import google.protobuf  # noqa: F401
@@ -37,9 +39,9 @@ def test_protobuf_canary_for_transform_with_state():
     pytest.fail(
         "google.protobuf is now importable — transformWithStateInPandas "
         "(Spark 4 arbitrary-state API) is likely usable in this "
-        "environment. Port sessionize_stream / dedup_stream "
-        "(streaming/incremental.py) from applyInPandasWithState, then "
-        "update this canary and .claude/skills/verify/SKILL.md."
+        "environment. No Python arbitrary-state operator is left to port "
+        "(streaming/incremental.py is fully native); record the new "
+        "capability in this canary and the verify skill notes."
     )
 
 

@@ -140,6 +140,55 @@ def test_sessionize_stream_gap_semantics(spark, tmp_path):
     assert not any(u == 7 and s.startswith("2024-01-01 13:30") for u, s, _, _ in got)
 
 
+def test_closed_sessions_keeps_successor_closed_inside_final_horizon(spark, tmp_path):
+    """The case append mode gets wrong: a session closed by its successor
+    whose end + gap is still past the final watermark is never evicted in
+    append mode, yet it is closed. Complete mode + closed_sessions must
+    emit it, and must still hold back the user's trailing open session."""
+    from dataengineering_londonhousingmap_spark.streaming.incremental import (
+        closed_sessions,
+        sessionize_stream,
+    )
+
+    src = str(tmp_path / "closed_src")
+    rows = [
+        # user 7: session 10:00-10:10 closed by the 11:00 successor; its
+        # end + 30min = 10:40 is NOT before the final watermark
+        # (12:00 - 2h = 10:00), so only the successor closes it
+        (7, "2024-01-01 10:00:00", 1.0),
+        (7, "2024-01-01 10:05:00", None),  # NULL value counts, sums as 0
+        (7, "2024-01-01 10:10:00", 2.0),
+        (7, "2024-01-01 11:00:00", 4.0),   # trailing, stays open
+        (9, "2024-01-01 08:00:00", 1.5),   # 08:30 < 10:00: watermark-closed
+        (8, "2024-01-01 12:00:00", 0.5),   # sets max ts; trailing, open
+        # NULL user: no successor relation (SQL equality, as the oracle),
+        # so only the watermark closes its sessions — 08:00 but not 10:00
+        (None, "2024-01-01 08:00:00", 2.5),
+        (None, "2024-01-01 10:00:00", 3.5),
+        (None, "2024-01-01 11:00:00", 4.5),
+    ]
+    (
+        spark.createDataFrame(rows, "user_id long, ts string, value double")
+        .withColumn("ts", F.to_timestamp("ts"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(src)
+    )
+    stream = spark.readStream.schema("user_id long, ts timestamp, value double").parquet(src)
+    sessions = run_stream_to_memory(
+        sessionize_stream(stream, gap_minutes=30), "t_closed_sessions", "complete"
+    )
+    got = {
+        (r.user_id, str(r.session_start), str(r.session_end), r.n_events, r.total_value)
+        for r in closed_sessions(sessions, gap_minutes=30).collect()
+    }
+    assert got == {
+        (7, "2024-01-01 10:00:00", "2024-01-01 10:10:00", 3, 3.0),
+        (9, "2024-01-01 08:00:00", "2024-01-01 08:00:00", 1, 1.5),
+        (None, "2024-01-01 08:00:00", "2024-01-01 08:00:00", 1, 2.5),
+    }
+
+
 def test_checkpoint_resume_is_exactly_once(spark, tmp_path):
     """A parquet-sink stream restarted from its checkpoint must not
     re-emit already-committed micro-batches (the engine's answer to the

@@ -422,8 +422,10 @@ pin switched from 16 to sparkContext.defaultParallelism (output
 partition-independent — oracle re-verified on local[8]); clusters size
 state via the statePartitions session knob as before. The residual
 ~11.5 s at 32 partitions is the irreducible Python-per-group cost of
-951,630 emitted sessions over 15k keys — no plan defect; tools/
-profile_stream_sessions.py reproduces the whole matrix.
+951,630 emitted sessions over 15k keys — no plan defect. The matrix
+is kept in STREAM_PROFILE_r11.json; its one-off profiling tool was
+removed along with the Python operator it profiled (sessionize_stream
+now runs on the native session window).
 
 ## r11 — quotient-threshold A/B at 10×: sparse default lowered to 16k
 
@@ -507,15 +509,17 @@ arm faster by >1.25× outside the gate.
 
 ## r12 — sessionize crossover MEASURED: there isn't one
 
-AB_SESSIONIZE_r12.json (VERDICT r11 stretch task 8, tools/
-ab_sessionize.py — interleaved best-of-2, one session): custom
+AB_SESSIONIZE_r12.json (VERDICT r11 stretch task 8 — interleaved
+best-of-2, one session; the one-off A/B tool is gone): custom
 applyInPandasWithState vs native F.session_window on the same events
 feed, same 30-minute gap. Native wins 3.46× at sf0.1 (0.89 vs 3.09 s)
 and 3.70× at 10× (2.67 vs 9.90 s) — the gap *grows* with scale, so
 "use native at scale" undersold it: use native at EVERY scale unless
 the session needs per-group custom logic or immediate successor-closed
 emission (the two things session_window can't express — and the reason
-X20 exists). Docstring of sessionize_stream now carries the numbers.
+X20 exists). sessionize_stream has since moved onto the native exec:
+a complete-mode run plus the closed_sessions filter states the
+successor-closed emission rule declaratively.
 
 ## r12 — A/B harnesses drift-gated
 
