@@ -30,8 +30,14 @@ from pyspark.sql import SparkSession
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
-def get_session(app_name: str = "dataengineering_londonhousingmap_spark", cpus: str | int | None = None) -> SparkSession:
-    """Local test/bench session. Idempotent (getOrCreate)."""
+def get_session(
+    app_name: str = "dataengineering_londonhousingmap_spark",
+    cpus: str | int | None = None,
+    ui: bool = False,
+) -> SparkSession:
+    """Local test/bench session. Idempotent (getOrCreate). ``ui=True`` turns
+    the Spark UI and its REST API on (tools/profile_query.py reads stage
+    metrics from it); every other conf is the same."""
     cpus = str(cpus or _CPUS)
     builder = (
         SparkSession.builder.appName(app_name)
@@ -51,7 +57,7 @@ def get_session(app_name: str = "dataengineering_londonhousingmap_spark", cpus: 
         # ANSI-on default — verified by the test suite's ANSI session)
         .config("spark.sql.ansi.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
+        .config("spark.ui.enabled", str(ui).lower())
         # PySpark 4's DataFrame-debugging hook wraps EVERY DataFrame/Column
         # API call with a conf-get RPC plus origin set/clear RPCs plus a
         # Python stack walk (pyspark/errors/utils.py:_with_origin) — ~3

@@ -11,11 +11,26 @@ At 100 TB the scan path is the whole game: every reader here produces plans
 where Catalyst pushes filters/projections into the Parquet scan
 (``PushedFilters``/``ReadSchema`` in ``.explain``), and sinks partition by the
 natural pruning key so downstream reads prune.
+
+Testdata tables are read with the schema Parquet's footers declare, inferred
+once per file version: ``spark.read.parquet`` without a schema runs a footer-
+inference Spark job on every call, so :func:`read_testdata` memoizes each
+file's inferred schema and hands it back on later reads. The memo key is the
+file's identity (absolute path, ``st_dev``, ``st_ino``, ``st_size``,
+``st_mtime_ns``) plus the session confs that change how Parquet types map to
+Spark types (``_PARQUET_TYPE_CONFS``), so a rewritten file or a swapped
+vintage is inferred afresh. Directories, globs and paths that fail
+``os.stat`` are never memoized (a directory's stat does not change when a
+file inside it is rewritten). The declared ``schemas.TESTDATA_TABLES`` cannot
+serve as the read schema: the files disagree with them on every vintage
+(``timestamp_ntz`` dates and event times where they declare ``timestamp``,
+INT64-nanosecond ``events.ts`` on the adversarial vintage).
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,8 +82,48 @@ def read_json(
     return spark.read.schema(schema).json(path, multiLine=multiLine, **options)
 
 
+# session confs that change how Parquet physical types map to Spark types
+_PARQUET_TYPE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
+
+
+def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a single file's schema once
+    per file version and type-mapping confs, then reads with it (no
+    footer-inference job). Directories, globs and unstat-able paths take the
+    plain read every time."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode) or any(c in path for c in "*?[{\\"):
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path), st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns,
+        tuple(spark.conf.get(k) for k in _PARQUET_TYPE_CONFS),
+    )
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[key] = df.schema
+    return df
+
+
 def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Load one driver testdata table with its declared schema.
+    """Load one driver testdata table with the schema its Parquet file
+    declares.
+
+    The schema is inferred on the first read of each file version and reused
+    after that (``_read_parquet_memo``; key and fall-through cases in the
+    module docstring). It is never the declared ``schemas.TESTDATA_TABLES``
+    entry: the files carry ``timestamp_ntz`` where those declare
+    ``timestamp``, and reading with them would change column types.
 
     ``events.parquet`` timestamps have shipped in two vintages: INT64
     nanoseconds (round-1 data — Spark's vectorized reader rejects NANOS as
@@ -81,15 +136,16 @@ def read_testdata(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """
     if table not in TESTDATA_TABLES:
         raise KeyError(f"unknown testdata table {table!r}")
+    path = f"{sf_dir}/{table}.parquet"
     if table == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{table}.parquet")
+        df = _read_parquet_memo(spark, path)
         if dict(df.dtypes).get("ts") == "bigint":
             from ..streaming.incremental import _ts_from_epoch_long
 
             df = df.withColumn("ts", _ts_from_epoch_long(F.col("ts")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{table}.parquet")
+    return _read_parquet_memo(spark, path)
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:

@@ -1,11 +1,13 @@
 #!/usr/bin/env python
-"""Capture .explain('formatted') for named queries into plans/r12/<q>_<tag>.txt.
+"""Capture .explain('formatted') for named queries into <out_dir>/<q>_<tag>.txt.
 
-Usage: python tools/capture_plans_r12.py before q_a q_b ...
-       python tools/capture_plans_r12.py before --headline   (all bench queries)
+Usage: python tools/capture_plans.py OUT_DIR before q_a q_b ...
+       python tools/capture_plans.py OUT_DIR before --headline   (all bench queries)
 
 Plan-only (no execution beyond what eager materialize() runs at
-construction time); used for the optimization-round before/after evidence.
+construction time); used for before/after plan-identity evidence. A name
+given twice is captured twice in the same session and its file keeps the
+second capture (e.g. the plan built from warm, memoized table reads).
 """
 
 from __future__ import annotations
@@ -19,8 +21,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    out_dir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     from dataengineering_londonhousingmap_spark.queries import QUERIES
     from dataengineering_londonhousingmap_spark.session import get_session
 
@@ -31,7 +33,6 @@ def main() -> None:
 
     spark = get_session("capture-plans")
     spark.sparkContext.setLogLevel("ERROR")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r12")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         try:

@@ -15,9 +15,9 @@ Usage:
   python tools/profile_query.py q_dedup_simhash q_ngram_jaccard --reps 3
   → writes /tmp/profile_<query>.json and prints a summary table.
 
-The profiling session enables the UI (localhost:4041+) — bench/driver
-sessions keep it off; this tool is measurement-only and never imported by
-the engine.
+The profiling session is the engine's ``get_session`` with ``ui=True`` (the
+UI's REST API serves the stage metrics) — bench/driver sessions keep it off;
+this tool is measurement-only and never imported by the engine.
 """
 
 from __future__ import annotations
@@ -52,25 +52,10 @@ def main() -> None:
     ap.add_argument("--top", type=int, default=12, help="stages to print")
     args = ap.parse_args()
 
-    # build the tuned session but WITH the UI for the REST stage metrics
-    from pyspark.sql import SparkSession
+    from dataengineering_londonhousingmap_spark.session import get_session
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4041")
-        .getOrCreate()
-    )
+    # the engine's tuned session, with the UI on for the REST stage metrics
+    spark = get_session("profile", ui=True)
     spark.sparkContext.setLogLevel("ERROR")
     port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[-1])
 
