@@ -29,6 +29,11 @@ from pyspark.sql import SparkSession
 # one post-shuffle task per core with no scheduling waves on test data.
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Entries in the JVM-wide cache of compiled generated classes (static conf,
+# read once when CodeGenerator first initialises). Sized from the whole
+# catalog's working set, see get_session.
+CODEGEN_CACHE_MAX_ENTRIES = 4096
+
 
 def get_session(
     app_name: str = "dataengineering_londonhousingmap_spark",
@@ -67,6 +72,37 @@ def get_session(
         # plan wall 2.04 → 0.61 s with the hook off, r12 opt measurement).
         # Driver-side overhead, scale-independent — off in every profile.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Spark's default codegen cache holds 100 compiled classes; a
+        # long-lived session replaying a mix of queries needs more, or it
+        # evicts and recompiles (Janino on the driver thread, then JIT
+        # again) the same generated source on every pass. Measured with
+        # CodegenMetrics' compile count, local[4]: the 7-query serving mix
+        # recompiled 168 classes per warm pass at sf0.01, the 6-query
+        # ingest mix 113; at 4096 both compile 0 after their first pass.
+        # Sizing rule: the whole catalog's distinct generated sources, plus
+        # headroom. One process running all 211 catalog queries at sf0.001
+        # with an unbounded cache compiled 2600 distinct sources on pass 0
+        # (2195 with the stage id out of class names, below) and 51 (39)
+        # new ones on pass 1. The cache stays bounded, so that per-pass
+        # trickle is evicted rather than kept. Metaspace after one full
+        # catalog pass: 229 MB at 4096 entries, 213 MB at 100 (77 MB at
+        # session start). No plan or result changes.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES))
+        # The cache key is the generated source, and by default the class
+        # name in it carries the whole-stage codegen stage id. AQE numbers
+        # stages in the order it plans them, which follows which shuffle
+        # stage finished first, so the same pipeline comes back under
+        # another id on a later run and misses the cache: the serving mix
+        # at sf0.001 on local[8] kept compiling 2-12 such renamed twins per
+        # warm pass for up to four passes. Without the id every warm pass
+        # compiles 0. The id stays in the source's codegenStageId comment.
+        .config("spark.sql.codegen.useIdInClassName", "false")
+        # read_testdata("events") and read_events_stream set this
+        # session-wide before reading events (INT64-nanosecond vintages);
+        # pinning it here keeps the conf, and with it the testdata
+        # schema-memo key (sources/io.py), the same for every read of the
+        # process instead of flipping at the first events read
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     return builder.getOrCreate()
 
@@ -97,6 +133,10 @@ def cluster_conf(executors: int = 1000, cores_per_executor: int = 5) -> dict[str
         # DataFrame/Column API call, error-message enrichment only) — pure
         # driver overhead at any scale; see get_session
         "spark.python.sql.dataFrameDebugging.enabled": "false",
+        # hold the catalog's generated classes instead of recompiling them
+        # on every pass of a long-lived session; see get_session
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_MAX_ENTRIES),
+        "spark.sql.codegen.useIdInClassName": "false",
         # with dynamic allocation / spot executors, executor-local
         # localCheckpoint blocks don't survive executor loss — flip every
         # materialize() call site to reliable checkpoints (requires

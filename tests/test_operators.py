@@ -529,7 +529,7 @@ def test_round2c_plan_shapes(spark, sf_dir):
 
 
 def test_cluster_conf_is_consistent():
-    from dataengineering_londonhousingmap_spark.session import cluster_conf
+    from dataengineering_londonhousingmap_spark.session import CODEGEN_CACHE_MAX_ENTRIES, cluster_conf
 
     conf = cluster_conf(executors=1000, cores_per_executor=5)
     assert int(conf["spark.sql.shuffle.partitions"]) == 1000 * 5 * 3
@@ -537,6 +537,9 @@ def test_cluster_conf_is_consistent():
     assert int(conf["spark.sql.files.maxPartitionBytes"]) == 128 * 1024 * 1024
     # broadcast threshold must stay below a sane executor-memory fraction
     assert int(conf["spark.sql.autoBroadcastJoinThreshold"]) <= 128 * 1024 * 1024
+    # the same codegen cache size as the local session profile
+    assert conf["spark.sql.codegen.cache.maxEntries"] == str(CODEGEN_CACHE_MAX_ENTRIES)
+    assert conf["spark.sql.codegen.useIdInClassName"] == "false"
 
 
 def test_review_fixes_regressions(spark):

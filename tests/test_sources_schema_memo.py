@@ -4,7 +4,8 @@
 and reads with the memoized schema after that, so a repeated table read
 launches no footer-inference Spark job. These tests pin the saving (job
 counts under a job group, not walls), the vintage and staleness guards of
-the memo key, and the directory fall-through.
+the memo key, a key that stays put across an events read, and the directory
+fall-through.
 """
 
 from __future__ import annotations
@@ -82,6 +83,17 @@ def test_rewritten_file_is_inferred_afresh(spark, sf_dir, tmp_path):
     after = read_testdata(spark, str(tmp_path), "region")
     assert after.dtypes == [("r_regionkey", "bigint"), ("r_label", "string"), ("w", "double")]
     assert sorted(tuple(r) for r in after.collect()) == [(7, "x", 0.5), (8, "y", 1.5)]
+
+
+def test_events_read_does_not_flip_the_memo_key(spark, sf_dir, tmp_path):
+    # a new session carries the builder's confs and none of the shared
+    # session's runtime sets, like a fresh get_session process
+    fresh = spark.newSession()
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    shutil.copy(os.path.join(sf_dir, "region.parquet"), tmp_path)
+    assert _jobs_of(fresh, lambda: read_testdata(fresh, str(tmp_path), "region")) == 1
+    read_testdata(fresh, sf_dir, "events")  # sets nanosAsLong session-wide
+    assert _jobs_of(fresh, lambda: read_testdata(fresh, str(tmp_path), "region")) == 0
 
 
 def test_directory_is_never_memoized(spark, sf_dir, tmp_path):

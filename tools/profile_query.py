@@ -10,6 +10,11 @@ methodology), measures:
   * t_run   — per-rep noop-sink wall (best-of-N reported)
   * stages  — per-stage executorRunTime / shuffle bytes / task counts from
     the UI REST API, attributed to the rep via the job-group stage-id range
+  * compiles — Janino compiles of generated classes and their summed ms
+    (CodegenMetrics, CodeGenerator.compileTime), printed per rep. Repeating
+    a single query cannot show a mix's codegen-cache thrash: its warm reps
+    reuse only its own classes, which for most queries fit even Spark's
+    default 100-entry cache.
 
 Usage:
   python tools/profile_query.py q_dedup_simhash q_ngram_jaccard --reps 3
@@ -44,6 +49,14 @@ def _app_id(port: int) -> str:
     return _ui_json(port, "/api/v1/applications")[0]["id"]
 
 
+def _codegen(spark) -> tuple[int, float]:
+    """(compiles, summed compile ms) of generated classes in this JVM so far."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
@@ -74,12 +87,16 @@ def main() -> None:
                 s["stageId"] for s in _ui_json(port, f"/api/v1/applications/{app}/stages")
             }
             spark.sparkContext.setJobDescription(f"{name} rep{rep}")
+            n0, ms0 = _codegen(spark)
             t0 = time.time()
             df = QUERIES[name](spark, args.sf_dir)
             t_plan = time.time() - t0
             t1 = time.time()
             df.write.format("noop").mode("overwrite").save()
             t_run = time.time() - t1
+            n1, ms1 = _codegen(spark)
+            compiles, compile_ms = n1 - n0, round(ms1 - ms0, 1)
+            print(f"{name} rep{rep}: {compiles} Janino compiles, {compile_ms} ms")
             spark.sparkContext.setJobDescription(None)
             stages = [
                 s
@@ -128,6 +145,8 @@ def main() -> None:
                     "t_run": round(t_run, 3),
                     "t_total": round(t_plan + t_run, 3),
                     "n_stages": len(rows),
+                    "compiles": compiles,
+                    "compile_ms": compile_ms,
                     "stages": rows,
                 }
             )
