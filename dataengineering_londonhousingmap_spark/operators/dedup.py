@@ -600,11 +600,21 @@ def ngram_containment_pairs(
 # cluster survivorship (connected components over near-dup pairs)
 # ---------------------------------------------------------------------------
 
+# Largest dup-member count (rows in groups of >= 2) the sparse arm collects
+# to the driver; above it the dense arm runs. Sized by r11's 10x A/B
+# (AB_QUOTIENT_r11.json): at ~45k dup members the dense merge-join mapping
+# beat the sparse collect + LocalRelation broadcasts by 10-25% on every
+# probed query (clusters/minhash/ngram/embed-exact), and dense at this value
+# beat sparse at 65536 on all four. 16k ids is a few hundred KB of
+# (rep, members) rows on the driver.
+_SPARSE_MAX_DUP_MEMBERS = 16_384
+
+
 class QuotientMapping:
     """Expansion handle returned by :func:`exact_dup_quotient` — carries the
     group structure plus WHICH physical strategy expansion should use. Three
-    arms, chosen from exact counts over the (already materialized) group
-    table, never from planner stats:
+    arms, chosen from exact counts over the fingerprint groups, never from
+    planner stats:
 
     - ``bypass`` — no group has ≥2 members (twin-free input). Expansion is
       the identity: rep-level results ARE member-level results, so every
@@ -612,59 +622,39 @@ class QuotientMapping:
       case on curated vintages, where r09's unconditional quotient paid two
       merge joins + a corpus-sized mapping checkpoint for nothing (measured
       +0.7s on q_ngram_jaccard at sf0.1 — VERDICT r09 task 1).
-    - ``sparse`` — duplicates exist but the dup-involved rows number at most
-      ``spark.dataengineering_londonhousingmap_spark.quotient.sparseMaxDupMembers``
-      (exact count; default 16k after the r11 10x threshold A/B — at 45k
-      dup members the dense merge-join mapping beat the sparse collect +
-      LocalRelation arm on every probed query by 10-25%, consistent sign
-      across clusters/minhash/ngram/embed-exact, so the sparse arm is now
-      reserved for dup sets where its fixed cost is provably small;
-      ~16k ≈ a few hundred KB of (id, rep) pairs on the driver).
-      The multi-group members are collected ONCE and expansion becomes pure
-      Column expressions — ``explode(try_element_at(<literal map>, rep))``
-      — so the main plan gains ZERO joins, broadcasts, or shuffles. A
-      broadcast-join variant was measured first (r10) and was SLOWER than
-      dense at sf0.1: with a handful of twins every extra job (detection,
-      tiny-mapping checkpoint, per-expansion broadcast builds) is pure
-      fixed overhead, which the literal arm's single bounded collect
-      replaces outright. Bounded driver state from an exact count — the
-      same contract as IVF's k×dim centroid collect.
+    - ``sparse`` — duplicates exist and the dup-involved rows number at most
+      ``_SPARSE_MAX_DUP_MEMBERS`` (exact count). The multi-member groups are
+      collected ONCE and shipped back as a LocalRelation
+      (``members_df``: one Arrow batch, no job); the rep filter is a
+      broadcast anti-join of the non-rep ids and expansion a broadcast left
+      join + explode — twin-proportional, no shuffle of the main plan.
+      Bounded driver state from an exact count — the same contract as
+      IVF's k×dim centroid collect.
     - ``dense`` — twin-heavy (the common-crawl shape). Full corpus-sized
       (id, rep) mapping, merge-pinned shuffle joins for expansion: the r09
       behavior, kept verbatim because broadcasting a corpus-proportional
       frame is the driver-OOM shape the merge-pin contract forbids.
 
     All three arms are output-IDENTICAL (tests/test_quotient.py pins each
-    arm against the direct path and against the other arms). Set
-    ``spark.dataengineering_londonhousingmap_spark.quotient.mode=dense`` to force the
-    r09 plan shape for A/B measurement.
+    arm against the direct path and against the other arms; tests force
+    the dense arm by monkeypatching ``_SPARSE_MAX_DUP_MEMBERS``).
     """
 
     def __init__(self, kind: str, id_col: str, df: DataFrame | None = None,
                  multi_sizes: DataFrame | None = None,
-                 members: dict | None = None, members_df: DataFrame | None = None,
-                 literal: bool = False):
+                 members_df: DataFrame | None = None):
         self.kind = kind          # "bypass" | "sparse" | "dense"
         self.id_col = id_col
         # dense: full corpus-sized (id_col, __rep) DataFrame; None otherwise
         self.df = df
         # dense: (__rep, __n) DataFrame for groups with __n >= 2
         self._multi_sizes = multi_sizes
-        # sparse: {rep -> [rep, member, ...]} for multi-member groups ONLY
-        # (driver-side, bounded by the exact-count gate)
-        self.members = members
-        # sparse: the same data as a LocalRelation (__q_rep, __q_members) —
-        # ONE createDataFrame pickle batch. NOT per-element expressions:
-        # Column.isin(<big list>) / F.lit(<big list>) build one py4j call
-        # PER ELEMENT (measured: 45k ids ≈ 20s of driver time), so literal
-        # plans are only viable for tiny dup sets while a LocalRelation is
-        # O(1) py4j calls at any bounded size.
-        self._members_df = members_df
-        # sparse sub-arm: dup sets at or under literalMaxDupMembers (default
-        # 128 ≈ 60 ms of py4j) use pure Column expressions instead of
-        # broadcast joins — the broadcast exchanges cost a measured 25-30%
-        # on twin-light sf0.1 queries while a dozen literals are free
-        self.literal = literal
+        # sparse: (__q_rep, __q_members) LocalRelation of the multi-member
+        # groups ONLY (bounded by the exact-count gate). NOT per-element
+        # expressions: Column.isin(<big list>) / F.lit(<big list>) build
+        # one py4j call PER ELEMENT (measured: 45k ids ≈ 20s of driver
+        # time), while a LocalRelation is O(1) py4j calls at any size.
+        self.members_df = members_df
 
     @property
     def twin_free(self) -> bool:
@@ -684,7 +674,7 @@ class QuotientMapping:
         LocalRelation (no job). Callers must branch on ``twin_free``
         before using it (bypass has none)."""
         if self.kind == "sparse":
-            return self._members_df.select(
+            return self.members_df.select(
                 F.col("__q_rep").alias("__rep"),
                 F.size("__q_members").cast("long").alias("__n"),
             )
@@ -700,17 +690,6 @@ class QuotientMapping:
         against the multi-group sizes only."""
         if self.kind == "bypass":
             return rep_df.withColumn(out_col, F.lit(1).cast("long"))
-        if self.kind == "sparse" and self.literal:
-            reps = list(self.members)
-            size_map = F.map_from_arrays(
-                F.lit(reps), F.lit([len(self.members[r]) for r in reps])  # py4j-audited: literal sub-arm only — dup members <= literalMaxDupMembers (128)
-            )
-            return rep_df.withColumn(
-                out_col,
-                F.coalesce(
-                    F.try_element_at(size_map, F.col(rep_col)), F.lit(1)
-                ).cast("long"),
-            )
         ms = self.multi_sizes().select(
             F.col("__rep").alias(rep_col), F.col("__n").alias("__q_n")
         )
@@ -725,18 +704,13 @@ class QuotientMapping:
     def multi_member_reps(self, reps: DataFrame, rep_col: str) -> DataFrame:
         """Rows of ``reps`` whose group has ≥2 members (for callers that
         compute the within-group self payload from the representative's own
-        data, e.g. the identical-vector cosine). Branch on ``twin_free``
-        first — bypass has none."""
-        if self.kind == "sparse" and self.literal:
-            # positive isin over non-null literal rep ids (a NULL rep_col
-            # row matches nothing — same as the semi join)
-            return reps.filter(F.col(rep_col).isin(list(self.members)))  # py4j-audited: literal sub-arm only — multi-group reps <= literalMaxDupMembers/2
-        if self.kind == "sparse":
-            keys = F.broadcast(
-                self._members_df.select(F.col("__q_rep").alias(rep_col))
-            )
-            return reps.join(keys, rep_col, "left_semi")
+        data, e.g. the identical-vector cosine). sparse: broadcast semi
+        join against the LocalRelation; dense: semi join against the
+        multi-group sizes. Branch on ``twin_free`` first — bypass has
+        none."""
         keys = self.multi_sizes().select(F.col("__rep").alias(rep_col))
+        if self.kind == "sparse":
+            keys = F.broadcast(keys)
         return reps.join(keys, rep_col, "left_semi")
 
     def expand(self, rep_df: DataFrame, rep_col: str,
@@ -757,22 +731,9 @@ class QuotientMapping:
         others = [c for c in rep_df.columns if c != rep_col]
         if self.kind == "bypass":
             return rep_df.select(F.col(rep_col).alias(out_col), *others)
-        if self.kind == "sparse" and self.literal:
-            reps = list(self.members)
-            member_map = F.map_from_arrays(
-                F.lit(reps), F.lit([self.members[r] for r in reps])  # py4j-audited: literal sub-arm only — total member count <= literalMaxDupMembers (128)
-            )
-            # try_element_at, never element_at: the driver's vanilla
-            # session is ANSI-ON and a singleton rep is a missing key,
-            # which must be NULL (→ array(rep) fallback), not an error
-            members = F.coalesce(
-                F.try_element_at(member_map, F.col(rep_col)),
-                F.array(F.col(rep_col)),
-            )
-            return rep_df.select(F.explode(members).alias(out_col), *others)
         if self.kind == "sparse":
             extra = F.broadcast(
-                self._members_df.withColumnRenamed("__q_rep", rep_col)
+                self.members_df.withColumnRenamed("__q_rep", rep_col)
             )
             members = F.coalesce(
                 F.col("__q_members"), F.array(F.col(rep_col))
@@ -821,33 +782,31 @@ def exact_dup_quotient(
 
     Returns ``(reps, mapping)``: ``reps`` = the full rows of each group's
     min-id representative (run the near-dup pipeline on these); ``mapping``
-    = a :class:`QuotientMapping` whose expansion strategy is picked from
-    EXACT counts over the materialized group table (r10): twin-free inputs
-    short-circuit to the identity (``reps`` is ``df`` itself — no semi-join,
-    no mapping, no expansion joins), twin-light inputs get a broadcast-sized
-    mapping restricted to multi-member groups, twin-heavy inputs keep the
-    r09 corpus-sized merge-join mapping. One fingerprint shuffle + one tiny
-    detection aggregate in every arm.
+    = a :class:`QuotientMapping` whose arm is picked from EXACT counts of
+    one detection aggregate over the fingerprint groups (r10): twin-free
+    inputs bypass (``reps`` is ``df`` itself — no semi-join, no mapping, no
+    expansion joins), inputs with at most ``_SPARSE_MAX_DUP_MEMBERS`` dup
+    rows take the sparse arm (broadcast LocalRelation of the multi-member
+    groups), twin-heavier inputs the dense arm (the r09 corpus-sized
+    merge-join mapping). One fingerprint shuffle + one tiny detection
+    aggregate in every arm.
 
     Precondition (r11): ``id_col`` must be non-NULL on every row. The three
     arms' rep filters have different NULL-id semantics (the dense semi-join
     drops a NULL id, the sparse anti-join keeps it, bypass returns ``df``
     verbatim), so a NULL id would silently diverge across arms — and a
-    NULL-id rep could never be joined back by ``expand`` anyway. Auto mode
-    ENFORCES this with a ValueError for free (one extra max() folded into
-    the existing detection aggregate); explicit ``mode=dense`` skips
-    detection by design, so there the precondition is documented, not
-    checked.
+    NULL-id rep could never be joined back by ``expand`` anyway. Every call
+    ENFORCES this with a ValueError for free (one extra count folded into
+    the detection aggregate), whichever arm the input then takes.
 
-    Deliberate trade (r10): auto mode detects BEFORE checkpointing, so the
-    auto→dense fallback re-shuffles the (id, fingerprint) pairs once more
-    for the group-table checkpoint — a second narrow-column pass paid only
-    on corpora with >sparseMaxDupMembers dup rows, where the quotient's
-    savings dwarf it (the 10× lanes measure ~10-100× per family).
-    Checkpoint-first was measured worse: it charges every twin-free input
-    a wasted group-table checkpoint, and twin-free is the common curated
-    vintage. ``mode=dense`` skips detection entirely (one shuffle, the
-    exact r09 plan).
+    Deliberate trade (r10): detection runs BEFORE checkpointing, so the
+    dense arm re-shuffles the (id, fingerprint) pairs once more for the
+    group-table checkpoint — a second narrow-column pass paid only on
+    corpora with more than ``_SPARSE_MAX_DUP_MEMBERS`` dup rows, where the
+    quotient's savings dwarf it (the 10× lanes measure ~10-100× per
+    family). Checkpoint-first was measured worse: it charges every
+    twin-free input a wasted group-table checkpoint, and twin-free is the
+    common curated vintage.
 
     Driver-job shape (r13 opt): the sparse arm's member fetch is ONE
     groupBy collect (``_quotient_members_plan``) — the previous shape
@@ -904,7 +863,7 @@ def _quotient_members_plan(m: DataFrame, id_col: str) -> DataFrame:
     plus a broadcast exchange per call, just to re-derive rows this
     single aggregate yields directly. collect_list buffers are bounded
     because callers only run this plan AFTER detection proved
-    dup_members ≤ sparseMaxDupMembers (no group can exceed it)."""
+    dup_members ≤ _SPARSE_MAX_DUP_MEMBERS (no group can exceed it)."""
     return (
         m.groupBy("__fp")
         .agg(
@@ -917,12 +876,11 @@ def _quotient_members_plan(m: DataFrame, id_col: str) -> DataFrame:
 
 
 def _quotient_sparse(
-    df: DataFrame, id_col: str, id_type, member_rows, lit_max: int
+    df: DataFrame, id_col: str, id_type, member_rows
 ) -> tuple[DataFrame, QuotientMapping]:
     """Build the sparse-arm (reps, mapping) from the collected multi-member
     group rows (bounded by the detection gate)."""
-    members: dict = {r["__rep"]: list(r["__ms"]) for r in member_rows}
-    dup_members = sum(len(v) for v in members.values())
+    members = [(r["__rep"], list(r["__ms"])) for r in member_rows]
     # ship the driver-side structures back as TRUE LocalRelations
     # (operators/util.local_relation — Arrow batches, JVM-side decode,
     # exact stats). Never per-element expressions: isin(<list>)/
@@ -939,7 +897,7 @@ def _quotient_sparse(
     spark = df.sparkSession
     members_df = local_relation(
         spark,
-        list(members.items()),
+        members,
         StructType(
             [
                 StructField("__q_rep", id_type),
@@ -947,29 +905,17 @@ def _quotient_sparse(
             ]
         ),
     )
-    nonrep = [i for r, ms in members.items() for i in ms if i != r]
-    literal = dup_members <= lit_max
-    if literal:
-        # tiny dup set: pure Column expressions (no broadcast exchanges —
-        # measured 25-30% of twin-light query wall). ids are non-NULL here
-        # (the detection aggregate raised otherwise), so plain NOT-IN is
-        # total — no three-valued-logic arm needed.
-        reps = df.filter(~F.col(id_col).isin(nonrep))  # null-audited: non-null id_col enforced by the detection aggregate's ValueError above; # py4j-audited: literal arm gated on dup_members <= literalMaxDupMembers (default 128)
-    else:
-        nonrep_df = local_relation(
-            spark,
-            [(i,) for i in nonrep],
-            StructType([StructField(id_col, id_type)]),
-        )
-        # twin-proportional broadcast anti join (no shuffle). ids are
-        # non-NULL (enforced above); note an anti join would KEEP a NULL
-        # id while the dense arm's semi join would DROP it — exactly the
-        # divergence the precondition forbids.
-        reps = df.join(F.broadcast(nonrep_df), id_col, "left_anti")
-    return reps, QuotientMapping(
-        "sparse", id_col, members=members, members_df=members_df,
-        literal=literal,
+    nonrep_df = local_relation(
+        spark,
+        [(i,) for r, ms in members for i in ms if i != r],
+        StructType([StructField(id_col, id_type)]),
     )
+    # twin-proportional broadcast anti join (no shuffle). ids are non-NULL
+    # (the detection aggregate raised otherwise); note an anti join would
+    # KEEP a NULL id while the dense arm's semi join would DROP it —
+    # exactly the divergence the precondition forbids.
+    reps = df.join(F.broadcast(nonrep_df), id_col, "left_anti")
+    return reps, QuotientMapping("sparse", id_col, members_df=members_df)
 
 
 def _quotient_dense(
@@ -1013,95 +959,68 @@ def exact_dup_quotient_multi(specs) -> list[tuple[DataFrame, QuotientMapping]]:
     specs = [tuple(s) + (None,) * (4 - len(s)) for s in specs]
     if not specs:
         return []
-    sess = specs[0][0].sparkSession
-    mode = str(
-        sess.conf.get("spark.dataengineering_londonhousingmap_spark.quotient.mode", "auto")
-    ).lower()
-    sparse_max = int(
-        sess.conf.get(
-            "spark.dataengineering_londonhousingmap_spark.quotient.sparseMaxDupMembers", "16384"
-        )
-    )
-    lit_max = int(
-        sess.conf.get(
-            "spark.dataengineering_londonhousingmap_spark.quotient.literalMaxDupMembers", "128"
-        )
-    )
     ms = [
         _quotient_pairs_frame(df, id_col, fingerprint, collapsible)
         for df, id_col, fingerprint, collapsible in specs
     ]
+    # arm selection from EXACT counts, BEFORE any checkpoint: one fused
+    # fingerprint-shuffle detection job is the whole cost of the bypass arm
+    # (twin-free inputs skip the group-table checkpoint, the mapping, the
+    # semi-join, and every expansion join). Exact counts, never planner
+    # stats — checkpoint stats underestimate, and a wrong broadcast
+    # downstream is the driver-OOM shape the merge-pin contract exists for.
+    stats_u = None
+    for i, m in enumerate(ms):
+        s = _quotient_stats_frame(m, specs[i][1]).select(
+            F.lit(i).alias("__q_side"), "__mx", "__dup", "__null_ids"
+        )
+        stats_u = s if stats_u is None else stats_u.unionByName(s)  # union-audited: each branch is one input's one-row aggregate and scans that input at most once; inputs that share an un-materialized subtree (complementary filters of one scan) replay it once per branch, the same total scan cost as one job per input
+    stats = {r["__q_side"]: r for r in stats_u.collect()}
     results: list = [None] * len(specs)
-    if mode == "dense":
-        # explicit mode=dense skips detection by design (one shuffle, the
-        # exact r09 plan); the NULL-id precondition is documented there,
-        # not checked.
-        dense_sides = list(range(len(specs)))
-    else:
-        # arm selection from EXACT counts, BEFORE any checkpoint: one
-        # fused fingerprint-shuffle detection job is the whole cost of
-        # the bypass arm (twin-free inputs skip the group-table
-        # checkpoint, the mapping, the semi-join, and every expansion
-        # join). Exact counts, never planner stats — checkpoint stats
-        # underestimate, and a wrong broadcast downstream is the
-        # driver-OOM shape the merge-pin contract exists for.
-        stats_u = None
-        for i, m in enumerate(ms):
-            s = _quotient_stats_frame(m, specs[i][1]).select(
-                F.lit(i).alias("__q_side"), "__mx", "__dup", "__null_ids"
+    sparse_sides: list[int] = []
+    dense_sides: list[int] = []
+    for i, (df, id_col, _, _) in enumerate(specs):
+        if (stats[i]["__null_ids"] or 0) > 0:
+            raise ValueError(
+                f"exact_dup_quotient requires non-NULL {id_col!r} on "
+                f"every row ({stats[i]['__null_ids']} NULL-id rows "
+                "found): the arms' rep filters diverge on NULL ids and "
+                "a NULL-id rep cannot be expanded back"
             )
-            stats_u = s if stats_u is None else stats_u.unionByName(s)  # union-audited: each branch is one input's one-row aggregate and scans that input at most once; inputs that share an un-materialized subtree (complementary filters of one scan) replay it once per branch, the same total scan cost as one job per input
-        stats = {r["__q_side"]: r for r in stats_u.collect()}
-        for i, (df, id_col, _, _) in enumerate(specs):
-            if (stats[i]["__null_ids"] or 0) > 0:
-                raise ValueError(
-                    f"exact_dup_quotient requires non-NULL {id_col!r} on "
-                    f"every row ({stats[i]['__null_ids']} NULL-id rows "
-                    "found): the arms' rep filters diverge on NULL ids and "
-                    "a NULL-id rep cannot be expanded back"
+        if (stats[i]["__mx"] or 0) <= 1:
+            results[i] = (df, QuotientMapping("bypass", id_col))
+        elif (stats[i]["__dup"] or 0) <= _SPARSE_MAX_DUP_MEMBERS:
+            sparse_sides.append(i)
+        else:
+            dense_sides.append(i)
+    if sparse_sides:
+        # ONE bounded member-collect job for every sparse input
+        # (≤ _SPARSE_MAX_DUP_MEMBERS ids each, proven by the exact counts
+        # above). Inputs whose id types differ cannot share a union schema
+        # and collect per type bucket instead (still one job per bucket).
+        id_types = {i: ms[i].schema[specs[i][1]].dataType for i in sparse_sides}
+        buckets: dict[str, list[int]] = {}
+        for i in sparse_sides:
+            buckets.setdefault(id_types[i].simpleString(), []).append(i)
+        member_rows: dict[int, list] = {i: [] for i in sparse_sides}
+        for idxs in buckets.values():
+            if len(idxs) == 1:
+                member_rows[idxs[0]] = _quotient_members_plan(
+                    ms[idxs[0]], specs[idxs[0]][1]
+                ).collect()
+                continue
+            u = None
+            for i in idxs:
+                t = _quotient_members_plan(ms[i], specs[i][1]).select(
+                    F.lit(i).alias("__q_side"), "__rep", "__ms"
                 )
-        sparse_sides: list[int] = []
-        dense_sides: list[int] = []
-        for i, (df, id_col, _, _) in enumerate(specs):
-            max_n = stats[i]["__mx"] or 0
-            dup_members = stats[i]["__dup"] or 0
-            if max_n <= 1:
-                results[i] = (df, QuotientMapping("bypass", id_col))
-            elif dup_members <= sparse_max:
-                sparse_sides.append(i)
-            else:
-                dense_sides.append(i)
-        if sparse_sides:
-            # ONE bounded member-collect job for every sparse input
-            # (≤ sparse_max ids each, proven by the exact counts above).
-            # Inputs whose id types differ cannot share a union schema and
-            # collect per type bucket instead (still one job per bucket).
-            id_types = {
-                i: ms[i].schema[specs[i][1]].dataType for i in sparse_sides
-            }
-            buckets: dict[str, list[int]] = {}
-            for i in sparse_sides:
-                buckets.setdefault(id_types[i].simpleString(), []).append(i)
-            member_rows: dict[int, list] = {i: [] for i in sparse_sides}
-            for idxs in buckets.values():
-                if len(idxs) == 1:
-                    member_rows[idxs[0]] = _quotient_members_plan(
-                        ms[idxs[0]], specs[idxs[0]][1]
-                    ).collect()
-                    continue
-                u = None
-                for i in idxs:
-                    t = _quotient_members_plan(ms[i], specs[i][1]).select(
-                        F.lit(i).alias("__q_side"), "__rep", "__ms"
-                    )
-                    u = t if u is None else u.unionByName(t)  # union-audited: every branch is a DIFFERENT input's bounded member aggregate — no shared un-materialized subtree to replay
-                for r in u.collect():
-                    member_rows[r["__q_side"]].append(r)
-            for i in sparse_sides:
-                results[i] = _quotient_sparse(
-                    specs[i][0], specs[i][1], id_types[i], member_rows[i],
-                    lit_max,
-                )
+                u = t if u is None else u.unionByName(t)  # union-audited: every branch is a DIFFERENT input's bounded member aggregate — no shared un-materialized subtree to replay
+            for r in u.collect():
+                member_rows[r["__q_side"]].append(r)
+        for i in sparse_sides:
+            results[i] = _quotient_sparse(
+                specs[i][0], specs[i][1], id_types[i], member_rows[i]
+            )
     for i in dense_sides:
         results[i] = _quotient_dense(specs[i][0], specs[i][1], ms[i])
     return results
@@ -1322,42 +1241,35 @@ def connected_components(
         # 300-node path test exercises exactly that arm).
         if it < 2:
             new_labels = propagated
-            changed = (
-                new_labels.filter(F.col("label") < F.col("old")).limit(1).count()
+        else:
+            # pointer-doubling compression: label ← label's label. Every
+            # label value is itself an edge-incident vertex id (labels start
+            # as self and only ever move to a smaller reachable id), so the
+            # inner self-join is total. merge-pinned: both sides are the
+            # vertex-scaled checkpointed frame — LogicalRDD stats
+            # underestimate, and a broadcast build over it is the
+            # driver-OOM shape the merge-pin contract exists for (PLANS.md).
+            rep = propagated.select(
+                F.col("id").alias("__rid"), F.col("label").alias("__rlabel")
             )
-            labels = new_labels.select("id", "label")
-            if changed == 0:
-                converged = labels
-                break
-            continue
-        # pointer-doubling compression: label ← label's label. Every label
-        # value is itself an edge-incident vertex id (labels start as self
-        # and only ever move to a smaller reachable id), so the inner
-        # self-join is total. merge-pinned: both sides are the
-        # vertex-scaled checkpointed frame — LogicalRDD stats
-        # underestimate, and a broadcast build over it is the driver-OOM
-        # shape the merge-pin contract exists for (PLANS.md).
-        rep = propagated.select(
-            F.col("id").alias("__rid"), F.col("label").alias("__rlabel")
-        )
-        new_labels = (
-            propagated.join(
-                rep.hint("merge"), propagated["label"] == rep["__rid"], "left"
+            new_labels = (
+                propagated.join(
+                    rep.hint("merge"), propagated["label"] == rep["__rid"], "left"
+                )
+                # coalesce is defensive: the join is total by the invariant
+                # above; a left join can only ever keep a row, never lose one
+                .select(
+                    "id",
+                    F.coalesce(F.col("__rlabel"), F.col("label")).alias("label"),
+                    "old",
+                )
+                .transform(materialize)
             )
-            # coalesce is defensive: the join is total by the invariant
-            # above; a left join can only ever keep a row, never lose one
-            .select(
-                "id",
-                F.coalesce(F.col("__rlabel"), F.col("label")).alias("label"),
-                "old",
-            )
-            .transform(materialize)
-        )
-        changed = (
-            new_labels.filter(F.col("label") < F.col("old")).limit(1).count()
-        )
         labels = new_labels.select("id", "label")
-        if changed == 0:
+        # isEmpty, not limit(1).count(): the limit's generated counter field
+        # is renamed on every build, so that probe compiled fresh classes on
+        # every run and added a shuffle job for the count
+        if new_labels.filter(F.col("label") < F.col("old")).isEmpty():
             converged = labels
             break
     if converged is None:

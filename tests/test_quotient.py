@@ -168,6 +168,14 @@ def test_text_quotient_matches_direct_on_random_corpora(spark, texts):
     assert quot == direct
 
 
+def _members(mapping):
+    """The sparse arm's {rep: sorted members} for multi-member groups."""
+    return {
+        r["__q_rep"]: sorted(r["__q_members"])
+        for r in mapping.members_df.collect()
+    }
+
+
 def test_quotient_rep_counts(spark):
     """reps = one row per distinct collapsible value + every non-collapsible
     row; expansion covers every input id exactly once."""
@@ -181,9 +189,9 @@ def test_quotient_rep_counts(spark):
     )
     assert sorted(r["doc_id"] for r in reps.collect()) == [1, 3, 4, 5]
     # one twin group of 2 out of 5 rows → the sparse arm, whose
-    # driver-literal members cover multi-member groups only
+    # LocalRelation members cover multi-member groups only
     assert mapping.kind == "sparse"
-    assert {k: sorted(v) for k, v in mapping.members.items()} == {1: [1, 2]}
+    assert _members(mapping) == {1: [1, 2]}
     # expand over the full rep set reconstructs every input id exactly once
     expanded = mapping.expand(reps.select("doc_id"), "doc_id")
     assert sorted(r["doc_id"] for r in expanded.collect()) == [1, 2, 3, 4, 5]
@@ -355,7 +363,7 @@ def test_quotient_null_fingerprint_rows_stay_singletons(spark):
     # NULL-fingerprint rows route to singleton groups, so the only stored
     # group is the real twin pair (the sparse arm keeps multi-groups only)
     assert mapping.kind == "sparse"
-    assert {k: sorted(v) for k, v in mapping.members.items()} == {1: [1, 2]}
+    assert _members(mapping) == {1: [1, 2]}
     expanded = mapping.expand(reps.select("doc_id"), "doc_id")
     assert sorted(r["doc_id"] for r in expanded.collect()) == [1, 2, 3, 4]
 
@@ -375,10 +383,10 @@ def test_quotient_expand_pairs_requires_matching_self_payload(spark):
         )
 
 
-def test_quotient_null_id_rows_raise(spark):
+def test_quotient_null_id_rows_raise(spark, monkeypatch):
     """ADVICE r10: the three arms' rep filters diverge on NULL ids (dense
     semi-join drops them, sparse anti-join keeps them, bypass returns the
-    input verbatim), so auto mode must reject NULL ids loudly instead of
+    input verbatim), so every call must reject NULL ids loudly instead of
     silently picking arm-dependent semantics. The check rides the existing
     detection aggregate — no extra job."""
     import pytest
@@ -392,6 +400,14 @@ def test_quotient_null_id_rows_raise(spark):
     df2 = spark.createDataFrame([(1, "aa"), (None, "zz")], _PAIR_SCHEMA)
     with pytest.raises(ValueError, match="non-NULL 'doc_id'"):
         exact_dup_quotient(df2, "doc_id", F.md5("text"))
+    # the dense arm checks too: a NULL id beside a twin group that the
+    # dense arm would collapse
+    df3 = spark.createDataFrame(
+        [(1, "aa"), (2, "aa"), (None, "bb")], _PAIR_SCHEMA
+    )
+    with _forced_arm(monkeypatch, "dense"):
+        with pytest.raises(ValueError, match="non-NULL 'doc_id'"):
+            exact_dup_quotient(df3, "doc_id", F.md5("text"))
 
 
 def test_quotient_expand_pairs_bypass_rejects_self_pairs(spark):
@@ -537,27 +553,21 @@ def test_containment_quotient_matches_direct(spark):
 
 import contextlib  # noqa: E402
 
+from dataengineering_londonhousingmap_spark.operators import dedup  # noqa: E402
+
+_ARMS = ("sparse", "dense")
+
 
 @contextlib.contextmanager
-def _quotient_conf(spark, **kv):
-    keys = {
-        f"spark.dataengineering_londonhousingmap_spark.quotient.{k}": str(v) for k, v in kv.items()
-    }
-    old = {}
-    for k, v in keys.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
+def _forced_arm(monkeypatch, arm):
+    """Run the block with twin-bearing inputs routed to ``arm``: "sparse"
+    keeps the module's dup-member cap, "dense" lowers it to 0 so every
+    input with a twin group takes the dense arm (twin-free inputs still
+    bypass)."""
+    with monkeypatch.context() as mp:
+        if arm == "dense":
+            mp.setattr(dedup, "_SPARSE_MAX_DUP_MEMBERS", 0)
         yield
-    finally:
-        for k in keys:
-            if old[k] is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, old[k])
 
 
 def _twin_free_corpus(spark):
@@ -575,7 +585,7 @@ def _twin_free_corpus(spark):
     return spark.createDataFrame(rows, _PAIR_SCHEMA)
 
 
-def test_quotient_arm_selection(spark):
+def test_quotient_arm_selection(spark, monkeypatch):
     twin_free = _twin_free_corpus(spark)
     twin_heavy = _pair_corpus(spark)
     _, m1 = exact_dup_quotient(
@@ -585,24 +595,18 @@ def test_quotient_arm_selection(spark):
     _, m2 = exact_dup_quotient(
         twin_heavy, "doc_id", F.md5("text"), F.col("text").isNotNull()
     )
-    assert m2.kind == "sparse" and m2.literal  # tiny dup set → literal sub-arm
-    with _quotient_conf(spark, literalMaxDupMembers=0):
-        _, m2b = exact_dup_quotient(
-            twin_heavy, "doc_id", F.md5("text"), F.col("text").isNotNull()
-        )
-    assert m2b.kind == "sparse" and not m2b.literal  # LocalRelation sub-arm
-    # exact-count gate: dup members above the threshold → dense
-    with _quotient_conf(spark, sparseMaxDupMembers=0):
+    assert m2.kind == "sparse"
+    # exact-count gate: dup members above the cap → dense; a twin-free
+    # input bypasses whatever the cap
+    with _forced_arm(monkeypatch, "dense"):
         _, m3 = exact_dup_quotient(
             twin_heavy, "doc_id", F.md5("text"), F.col("text").isNotNull()
         )
-    assert m3.kind == "dense"
-    # mode=dense pins the r09 shape even on twin-free input (the A/B knob)
-    with _quotient_conf(spark, mode="dense"):
         _, m4 = exact_dup_quotient(
             twin_free, "doc_id", F.md5("text"), F.col("text").isNotNull()
         )
-    assert m4.kind == "dense"
+    assert m3.kind == "dense"
+    assert m4.kind == "bypass"
 
 
 def test_bypass_arm_taken_and_matches_direct_on_twin_free_corpus(spark):
@@ -631,30 +635,21 @@ def test_bypass_arm_taken_and_matches_direct_on_twin_free_corpus(spark):
     assert _njoins(_jaccard_quotient(docs)) == _njoins(_jaccard_direct(docs))
 
 
-def test_jaccard_quotient_matches_direct_on_every_arm(spark):
+def test_jaccard_quotient_matches_direct_on_every_arm(spark, monkeypatch):
     """The same twin-heavy corpus must produce the identical pair set under
-    the sparse arm (auto default here), the forced-dense arm (r09 shape),
+    the sparse arm (the default here), the forced-dense arm (r09 shape),
     and the direct path."""
     docs = _pair_corpus(spark)
     direct = {
         (r["id_a"], r["id_b"]): r["jaccard"] for r in _jaccard_direct(docs).collect()
     }
-    sparse_lit = {
-        (r["id_a"], r["id_b"]): r["jaccard"] for r in _jaccard_quotient(docs).collect()
-    }
-    # the LocalRelation sub-arm (big dup sets use broadcast joins, never
-    # per-element literals — the r10 py4j-storm fix)
-    with _quotient_conf(spark, literalMaxDupMembers=0):
-        sparse_rel = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in _jaccard_quotient(docs).collect()
-        }
-    with _quotient_conf(spark, sparseMaxDupMembers=0):
-        dense = {
-            (r["id_a"], r["id_b"]): r["jaccard"]
-            for r in _jaccard_quotient(docs).collect()
-        }
-    assert sparse_lit == direct and sparse_rel == direct and dense == direct
+    for arm in _ARMS:
+        with _forced_arm(monkeypatch, arm):
+            quot = {
+                (r["id_a"], r["id_b"]): r["jaccard"]
+                for r in _jaccard_quotient(docs).collect()
+            }
+        assert quot == direct, arm
 
 
 # ---------------------------------------------------------------------------
@@ -739,15 +734,15 @@ def _agreement_frame(docs, quotient: bool):
     )
 
 
-def test_agreement_quotient_matches_direct(spark):
+def test_agreement_quotient_matches_direct(spark, monkeypatch):
     docs = _pair_corpus(spark)
     direct = {tuple(r) for r in _agreement_frame(docs, quotient=False).collect()}
-    for conf in ({}, {"sparseMaxDupMembers": 0}):
-        with _quotient_conf(spark, **conf):
+    for arm in _ARMS:
+        with _forced_arm(monkeypatch, arm):
             quot = {
                 tuple(r) for r in _agreement_frame(docs, quotient=True).collect()
             }
-        assert quot == direct
+        assert quot == direct, arm
     # the fixture exercised disagreement arms: some pair is jaccard-only or
     # containment-only, and twin self-pairs carry all three methods
     assert any(r[4] != r[5] or r[4] != r[6] for r in direct)
@@ -796,13 +791,13 @@ def _leakage_frame(docs, quotient: bool):
     )
 
 
-def test_leakage_quotient_matches_direct(spark):
+def test_leakage_quotient_matches_direct(spark, monkeypatch):
     docs = _pair_corpus(spark)
     direct = {tuple(r) for r in _leakage_frame(docs, quotient=False).collect()}
-    for conf in ({}, {"sparseMaxDupMembers": 0}):
-        with _quotient_conf(spark, **conf):
+    for arm in _ARMS:
+        with _forced_arm(monkeypatch, arm):
             quot = {tuple(r) for r in _leakage_frame(docs, quotient=True).collect()}
-        assert quot == direct
+        assert quot == direct, arm
     # the filter-after-expansion arm did real work: at least one surviving
     # pair comes from a twin GROUP whose members straddle the split (the
     # rep-level pair alone could not decide it)
@@ -961,29 +956,22 @@ def _substring_direct(docs, w, mod, cap):
     )
 
 
-def test_substring_quotient_matches_direct_on_every_arm(spark):
+def test_substring_quotient_matches_direct_on_every_arm(spark, monkeypatch):
     docs = _substring_corpus(spark)
     w, mod, cap = 8, 2, 3
     direct = {
         (r["id_a"], r["id_b"]): r["shared_windows"]
         for r in _substring_direct(docs, w, mod, cap).collect()
     }
-    results = {}
-    for tag, conf in (
-        ("sparse_lit", {}),
-        ("sparse_rel", {"literalMaxDupMembers": 0}),
-        ("dense", {"sparseMaxDupMembers": 0}),
-    ):
-        with _quotient_conf(spark, **conf):
-            results[tag] = {
+    for arm in _ARMS:
+        with _forced_arm(monkeypatch, arm):
+            quot = {
                 (r["id_a"], r["id_b"]): r["shared_windows"]
                 for r in substring_dedup_pairs(
                     docs, "doc_id", "text", w=w, mod=mod, max_texts=cap
                 ).collect()
             }
-    assert results["sparse_lit"] == direct
-    assert results["sparse_rel"] == direct
-    assert results["dense"] == direct
+        assert quot == direct, arm
     # the fixture exercised what it claims: the twin self-pair, the
     # twin-to-near-dup cross pair, and NO pair among the 5 boilerplate
     # carriers (their only shared windows exceed the cap and were cut);
@@ -1015,7 +1003,7 @@ def test_substring_bypass_arm_on_twin_free_corpus(spark):
     assert quot == direct and len(direct) > 0
 
 
-def test_excise_spans_rescan_finds_zero_flagged_windows(spark):
+def test_excise_spans_rescan_finds_zero_flagged_windows(spark, monkeypatch):
     """VERDICT r11 task 3's pin — the full curation chain: boilerplate
     report → span excision → RE-SCAN of the rewritten corpus must find
     none of the originally-flagged windows, on every quotient arm."""
@@ -1037,19 +1025,15 @@ def test_excise_spans_rescan_finds_zero_flagged_windows(spark):
     assert flagged, "fixture produced no flagged cross-text spans"
 
     results = {}
-    for tag, conf in (
-        ("sparse_lit", {}),
-        ("sparse_rel", {"literalMaxDupMembers": 0}),
-        ("dense", {"sparseMaxDupMembers": 0}),
-    ):
-        with _quotient_conf(spark, **conf):
-            results[tag] = {
+    for arm in _ARMS:
+        with _forced_arm(monkeypatch, arm):
+            results[arm] = {
                 r["doc_id"]: (r["n_flagged_spans"], r["clean_text"])
                 for r in excise_spans(
                     docs, "doc_id", "text", w=w, mod=mod, min_texts=2
                 ).collect()
             }
-    assert results["sparse_lit"] == results["sparse_rel"] == results["dense"]
+    assert results["sparse"] == results["dense"]
     out = results["dense"]
 
     # every input doc comes back exactly once (NULL texts included)
@@ -1088,12 +1072,12 @@ from dataengineering_londonhousingmap_spark.operators.dedup import exact_dup_quo
 
 def _mapping_signature(reps, mapping, id_col):
     """Everything observable about one quotient result: the rep id set,
-    the arm, and the full expansion (covers members/members_df/df)."""
+    the arm, and the full expansion (covers members_df/df)."""
     rep_ids = sorted(r[id_col] for r in reps.select(id_col).collect())
     expanded = sorted(
         r[id_col] for r in mapping.expand(reps.select(id_col), id_col).collect()
     )
-    return (rep_ids, mapping.kind, mapping.literal, expanded)
+    return (rep_ids, mapping.kind, expanded)
 
 
 def test_quotient_multi_matches_per_side_calls(spark):
@@ -1153,9 +1137,7 @@ def test_quotient_multi_mixed_id_types_collect_per_bucket(spark):
         (str_docs, "k", F.md5("text"), F.col("text").isNotNull()),
     ])
     assert fused[0][1].kind == "sparse" and fused[1][1].kind == "sparse"
-    assert {k: sorted(v) for k, v in fused[1][1].members.items()} == {
-        "a": ["a", "b"]
-    }
+    assert _members(fused[1][1]) == {"a": ["a", "b"]}
     solo = exact_dup_quotient(
         long_docs, "doc_id", F.md5("text"), F.col("text").isNotNull()
     )

@@ -335,26 +335,28 @@ replication-lane residual is per-copy scan+score, i.e. workload.
 
 ## r10 — adaptive exact-dup quotient (bypass/sparse/dense)
 
-exact_dup_quotient picks its expansion strategy from EXACT counts over
-the fingerprint groups (never planner stats): twin-free → bypass (one
+exact_dup_quotient picks one of three arms from EXACT counts over the
+fingerprint groups (never planner stats): twin-free → bypass (one
 detection aggregate, no checkpoint/mapping/expansion joins — reps IS the
 input frame; 0.74× on q_dedup_embed_exact at sf0.1); dup members ≤
-spark.dataengineering_londonhousingmap_spark.quotient.sparseMaxDupMembers (default 64k) → a
-bounded driver collect with TWO physical sub-arms; else → the r09
-corpus-sized merge-pinned mapping, unchanged (the 10×-adversarial proven
-arm). The sub-arm split is a measured py4j lesson: Column.isin(<list>)
-and F.lit(<list>) cost one py4j round-trip PER ELEMENT (~0.4 ms — a
-45k-id isin spent 20s building the plan and put q_dedup_clusters at 68.8s
-on the 10× lane vs 8.3 forced-dense), so dup sets over
-…quotient.literalMaxDupMembers (default 128) ship as ONE createDataFrame
-LocalRelation and expand via broadcast left join + explode (clusters back
-to 7.8s ≈ dense), while tiny dup sets keep pure Column expressions
-(explode(try_element_at(<literal map>, rep)) — broadcast exchanges cost a
-measured 25-30% of twin-light sf0.1 query wall). Same-session interleaved
-best-of-3 at sf0.1 (8-twin vintage): auto/dense = 0.91 ngram_jaccard,
-1.12-1.14 minhash/incremental (detection+collect vs checkpoint costs,
-within the host's ±30% band — a wash), 0.69 embed_exact (bypass). A/B
-knob: spark.dataengineering_londonhousingmap_spark.quotient.mode=dense pins the r09 shape.
+operators/dedup._SPARSE_MAX_DUP_MEMBERS (16384 since r11) → sparse, a
+bounded driver collect shipped back as ONE LocalRelation that expands via
+broadcast left join + explode; else → the r09 corpus-sized merge-pinned
+mapping, unchanged (the 10×-adversarial proven arm). The LocalRelation
+is a measured py4j lesson: Column.isin(<list>) and F.lit(<list>) cost
+one py4j round-trip PER ELEMENT (~0.4 ms — a 45k-id isin spent 20s
+building the plan and put q_dedup_clusters at 68.8s on the 10× lane vs
+8.3 forced-dense); the LocalRelation brought clusters back to 7.8s ≈
+dense. A pure-literal sub-arm for ≤128 dup members
+(explode(try_element_at(<literal map>, rep))) and three quotient.* conf
+knobs (mode=dense and the two thresholds) were removed later to leave
+one sparse shape. Its cost, measured at sf0.1 on the 14 queries the
+literal sub-arm served: each LocalRelation broadcast runs one Spark job
+(311 → 342 jobs per warm pass) and median walls read +5.6%. Same-session
+interleaved best-of-3 at sf0.1 (8-twin vintage): auto/dense = 0.91
+ngram_jaccard, 1.12-1.14 minhash/incremental (detection+collect vs
+checkpoint costs, within the host's ±30% band — a wash), 0.69
+embed_exact (bypass).
 Closing isolated best-of-3 under the five drift controls (r10, host
 drift 1.425 that session): normalized q_dedup_incremental 4.06 (1.01× of
 the r08 ref — inside the 1.1× target), q_dedup_minhash 1.81 (1.21×),
@@ -364,9 +366,9 @@ heavier text than r08's (the r09 driver measured ngram at 5.03 normalized
 on ITS vintage), and the same-data A/B above shows auto at or below the
 r09 dense shape on every query. Re-open trigger: auto/dense > 1.2 on any
 quotient query in a same-session interleaved A/B.
-Equivalence: tests/test_quotient.py pins every arm AND both sparse
-sub-arms against the direct path (including the agreement matrix and
-split-leakage conversions).
+Equivalence: tests/test_quotient.py pins every arm against the direct
+path (dense forced by monkeypatching the cap; including the agreement
+matrix and split-leakage conversions).
 
 ## r10 — streaming state posture for real clusters
 
@@ -429,17 +431,18 @@ now runs on the native session window).
 
 ## r11 — quotient-threshold A/B at 10×: sparse default lowered to 16k
 
-tools/ab_quotient_thresholds.py, interleaved best-of-3 per lane in one
-session. SPARSE axis (.bigdata, ~45k dup members; literal pinned 128):
-sparseMaxDupMembers 16384 forces dense, 65536/262144 take the sparse
-LocalRelation arm — dense won on EVERY query (clusters 5.72 vs
+A one-off threshold harness (since removed; results in
+AB_QUOTIENT_r11.json and AB_QUOTIENT_ADV_r12.json), interleaved
+best-of-3 per lane in one session. SPARSE axis (.bigdata, ~45k dup
+members; literal pinned 128): a sparse cap of 16384 forces dense,
+65536/262144 take the sparse LocalRelation arm — dense won on EVERY query (clusters 5.72 vs
 7.01/6.66, minhash 2.69 vs 3.54/3.24, ngram 5.59 vs 6.11/5.73,
 embed-exact 3.48 vs 4.27/4.34 s): at 45k members the bounded collect +
 LocalRelation broadcasts cost more than the merge-join mapping, so the
-r10 default (64k, chosen from sf0.1) was INVERTED at scale →
-sparseMaxDupMembers now defaults 16384. LITERAL axis (sf0.1, 16 dup
+r10 default (64k, chosen from sf0.1) was INVERTED at scale → the cap
+is 16384 (_SPARSE_MAX_DUP_MEMBERS). LITERAL axis (sf0.1, 16 dup
 members; sparse pinned 64k): lit 32/128/512 all within ±10% with no
-consistent sign — a wash, default 128 kept. Re-open trigger: a vintage
+consistent sign — a wash (the literal sub-arm was later removed). Re-open trigger: a vintage
 with 16k–45k dup members where the sparse arm beats forced-dense by
 >1.2× in a same-session A/B would argue for re-raising the threshold.
 
@@ -521,15 +524,12 @@ X20 exists). sessionize_stream has since moved onto the native exec:
 a complete-mode run plus the closed_sessions filter states the
 successor-closed emission rule declaratively.
 
-## r12 — A/B harnesses drift-gated
+## r12 — A/B harness drift-gated
 
-AB_VINTAGE_r11 normalized through drift 1.401; both A/B tools now
-refuse to be decided by normalization: ab_vintage re-runs once in a
-fresh session when the median control ratio leaves [0.8, 1.25], then
-exits 2 ("REFUSED") if still out of band; ab_quotient_thresholds uses
-its knob-invariant bypass query's config-to-config spread as the
-within-session noise control with the same re-run-then-refuse protocol
-(demonstrated ok at spread 1.09 on the adversarial lane).
+AB_VINTAGE_r11 normalized through drift 1.401; ab_vintage now refuses
+to be decided by normalization: it re-runs once in a fresh session when
+the median control ratio leaves [0.8, 1.25], then exits 2 ("REFUSED")
+if still out of band.
 
 ## r12 — never put a DISTINCT aggregate beside object-state sketches
 
