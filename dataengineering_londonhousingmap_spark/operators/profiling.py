@@ -6,10 +6,9 @@ to a row per column.
 
 Scale shape: a single scan feeding one global aggregate — Spark plans the
 multiple DISTINCT aggregates via Expand (×|cols| row multiplication before
-the partial agg), which is the exact-answer cost; at 100 TB swap
-``exact=False`` to approx_count_distinct (HLL++, one pass, no Expand) when
-±2% distinct counts are acceptable. min/max are computed in the column's
-native type and cast to string only for the uniform report schema.
+the partial agg), which is the exact-answer cost. min/max are computed in
+the column's native type and cast to string only for the uniform report
+schema.
 """
 
 from __future__ import annotations
@@ -18,20 +17,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def profile(df: DataFrame, cols: list[str] | None = None, exact: bool = True) -> DataFrame:
+def profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Returns (col_name, n_nulls, n_distinct, min_value, max_value), one
     row per profiled column."""
     cols = cols or df.columns
     aggs = []
     for c in cols:
-        d = (
-            F.countDistinct(F.col(c))
-            if exact
-            else F.approx_count_distinct(F.col(c))
-        )
         aggs += [
             F.sum(F.col(c).isNull().cast("long")).alias(f"__n_{c}"),
-            d.alias(f"__d_{c}"),
+            F.countDistinct(F.col(c)).alias(f"__d_{c}"),
             F.min(F.col(c)).cast("string").alias(f"__min_{c}"),
             F.max(F.col(c)).cast("string").alias(f"__max_{c}"),
         ]

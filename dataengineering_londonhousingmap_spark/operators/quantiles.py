@@ -7,7 +7,7 @@ percentile with bounded state:
 
 1. One aggregation pass computes the exact group count plus
    ``percentile_approx`` (Greenwald-Khanna sketch, deterministic rank error
-   ≤ n/accuracy) at p ± 1 % — a VALUE bracket guaranteed to contain the
+   ≤ n/_ACCURACY) at p ± 1 % — a VALUE bracket guaranteed to contain the
    k-th and (k+1)-th order statistics for any group with ≥ ~120 rows
    (margin 0.01 ≫ sketch error 1e-4). Groups smaller than 1 000 rows fall
    back to their [min, max] — trivially correct and trivially small.
@@ -28,89 +28,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .util import fan_out, materialize
+from .util import materialize
 
 _SMALL_GROUP = 1_000  # below this, [min, max] is the bracket (exact, tiny)
 _MARGIN = 0.01
-# inputs estimated under this skip the decode-once fan-out checkpoint —
-# the rescans they'd remove are cheaper than the eager job (see below).
-# NOTE the estimate for file-backed frames is COMPRESSED, column-pruned
-# bytes (sf0.1 lineitem projected to 2 columns reads ~3.3 MB for ~45 MB
-# raw), so the threshold is calibrated in compressed terms: ~2 MB
-# compressed ≈ one decode task of ~0.5-1 s — the point where spreading
-# the decode beats rescanning it three times.
-_NARROW_CKPT_MIN_BYTES = 2 * 1024 * 1024
-
-
-def _est_bytes(df: DataFrame) -> int:
-    """Catalyst's optimized-plan size estimate (driver-side, no job) —
-    the guard_global_sort introspection pattern. Unavailable estimates and
-    the Long.MaxValue unknown-size sentinel both return the sentinel, so
-    callers branching on `>= threshold` take their scale-safe arm."""
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return int(raw if isinstance(raw, int) else str(raw))
-    except Exception:
-        return (1 << 63) - 1
+# sizes only the GK bracket sketch, never the result (the in-bracket
+# refinement is exact): correctness needs sketch rank error 1/_ACCURACY ≤
+# _MARGIN, so 2 000 carries a 20× safety factor while the sketch merge
+# costs ~20 % less wall than 10 000 (bit-equality vs Spark ``percentile``
+# holds down to 500, unit-tested)
+_ACCURACY = 2_000
 
 
 def exact_percentiles_scalable(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    ps: list[float],
-    accuracy: int = 2_000,
-    materialize_result: bool = True,
-    spread_input: bool | None = None,
+    df: DataFrame, group_col: str, value_col: str, ps: list[float]
 ) -> DataFrame:
     """Exact interpolated percentile per group for each p in ``ps``,
     without per-group value buffering. Returns one row per group:
     (group_col, p_0, p_1, ...) in ``ps`` order.
 
-    ``accuracy`` only sizes the GK bracket sketch, never the result (the
-    in-bracket refinement is exact): correctness needs sketch rank error
-    1/accuracy ≤ _MARGIN, so 2 000 carries a 20× safety factor while the
-    sketch merge costs ~20 % less wall than the old 10 000 default
-    (bit-equality vs Spark ``percentile`` holds down to 500, unit-tested).
-
-    ``materialize_result=False`` skips the trailing checkpoint — pass it
-    when the result feeds exactly ONE downstream plan (q_winsorize's clamp
-    join, q_percentiles' select): the default eager job only pays off when
-    a caller composes multiple consumers over the result (the MAD shape),
-    where skipping it would replay the whole refinement per consumer
-    (r12 opt).
-
-    ``spread_input`` overrides the size-adaptive decode-once checkpoint
-    (None = decide from the Catalyst estimate). Pass it when ``df`` is a
-    DERIVED frame whose estimate is garbage — stats through a broadcast
-    join over a checkpoint read ~1.8e17 bytes for the 100k-row MAD
-    deviations frame, silently forcing the checkpoint arm; the caller
-    knows the true scale proxy (gate on the SOURCE table's estimate).
+    The result is lazy: a caller that feeds it to several plans cuts it
+    with ``materialize`` at the call site (q_outlier_mad's median), so
+    single-consumer callers pay no eager job for it.
     """
     v = F.col(value_col)
-    # ONE decode of the input projected to (group, value), spread across
-    # cores and checkpointed: the sketch aggregation, the below counts and
-    # the slice ranking each consumed the raw scan before (r12 opt) —
-    # a single-row-group parquet file decodes in ONE task, so the GK
-    # sketch partials ran effectively serial (measured 1.09 s of
-    # q_winsorize's bracket job at sf0.1; ~0.3 s after). At cluster scale
-    # the narrow checkpoint is |rows|×(key+value) — the same "decide with
-    # small rows" trade the engine's other two-pass operators make.
-    # SIZE-ADAPTIVE: below the (compressed-bytes) threshold, one task
-    # decodes the input in well under the eager job + repartition cost
-    # the checkpoint adds (measured: q_outlier_mad's two calls over the
-    # ~0.9 MB-compressed events table regressed 1.99 → 2.32 s with an
-    # unconditional checkpoint); an unavailable or sentinel estimate
-    # picks the checkpoint, the scale-safe branch, and derived-frame
-    # callers override via ``spread_input``.
     narrow = df.select(group_col, value_col)
-    spread = (
-        spread_input
-        if spread_input is not None
-        else _est_bytes(narrow) >= _NARROW_CKPT_MIN_BYTES
-    )
-    if spread:
-        narrow = materialize(fan_out(narrow))
     aggs = [
         F.count(value_col).alias("__n"),
         F.min(value_col).alias("__min"),
@@ -119,12 +61,12 @@ def exact_percentiles_scalable(
     for i, p in enumerate(ps):
         aggs.append(
             F.percentile_approx(
-                value_col, max(p - _MARGIN, 0.0), accuracy
+                value_col, max(p - _MARGIN, 0.0), _ACCURACY
             ).alias(f"__slo{i}")
         )
         aggs.append(
             F.percentile_approx(
-                value_col, min(p + _MARGIN, 1.0), accuracy
+                value_col, min(p + _MARGIN, 1.0), _ACCURACY
             ).alias(f"__shi{i}")
         )
     br = narrow.groupBy(group_col).agg(*aggs)
@@ -236,9 +178,4 @@ def exact_percentiles_scalable(
             F.col(f"__vk{i}") * (F.lit(1.0) - d)
             + F.coalesce(F.col(f"__vk1{i}"), F.col(f"__vk{i}")) * d,
         )
-    # the result is groups-sized and almost always broadcast-joined back
-    # against the fact by callers (winsorize, MAD, equi-depth) — materialize
-    # (by default) so a caller composing two percentile passes never
-    # replays this one; single-consumer callers opt out (see docstring).
-    out = out.select(group_col, *[f"p_{i}" for i in range(len(ps))])
-    return out.transform(materialize) if materialize_result else out
+    return out.select(group_col, *[f"p_{i}" for i in range(len(ps))])

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition a narrow input before CPU-heavy row expansion
     (cross join against a broadcast side, shingle/token explode, per-row
     hashing) — but only when it is under-partitioned.
@@ -27,8 +27,7 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     (createDataFrame, post-shuffle trees) report no files and get spread,
     which is exactly the call-site contract: fan_out wraps narrow sources.
     """
-    sess = df.sparkSession
-    target = min_partitions or sess.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     try:
         n_files = len(df.inputFiles())
     except Exception:  # complex plans where inputFiles is unsupported

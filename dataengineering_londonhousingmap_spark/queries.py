@@ -1411,8 +1411,7 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem")
     pct = exact_percentiles_scalable(
-        li, "l_returnflag", "l_extendedprice", [0.5, 0.9],
-        materialize_result=False,  # single consumer: the count join below
+        li, "l_returnflag", "l_extendedprice", [0.5, 0.9]
     ).select(
         "l_returnflag",
         F.round("p_0", 6).alias("median_price"),
@@ -2806,8 +2805,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = _t(spark, sf_dir, "lineitem")
     pct = exact_percentiles_scalable(
-        li, "l_returnflag", "l_extendedprice", [0.05, 0.95],
-        materialize_result=False,  # single consumer: the clamp join below
+        li, "l_returnflag", "l_extendedprice", [0.05, 0.95]
     ).select(
         "l_returnflag", F.col("p_0").alias("p05"), F.col("p_1").alias("p95")
     )
@@ -6044,23 +6042,19 @@ def q_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.quantiles import exact_percentiles_scalable
 
     ev = _t(spark, sf_dir, "events").select("event_type", "value")
-    med = exact_percentiles_scalable(ev, "event_type", "value", [0.5]).select(
-        "event_type", F.col("p_0").alias("__med")
+    # the median feeds dev, and dev feeds both the MAD pass and the flag
+    # join: cut it once so neither replays the median's refinement
+    med = (
+        exact_percentiles_scalable(ev, "event_type", "value", [0.5])
+        .transform(materialize)
+        .select("event_type", F.col("p_0").alias("__med"))
     )
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_type", "value", "__med", F.abs(F.col("value") - F.col("__med")).alias("__dev")
     )
-    from .operators.quantiles import _NARROW_CKPT_MIN_BYTES, _est_bytes
-
-    mad = exact_percentiles_scalable(
-        dev, "event_type", "__dev", [0.5],
-        materialize_result=False,  # single consumer: the final flag agg
-        # dev's own Catalyst estimate is garbage (stats through the
-        # broadcast join read ~1.8e17 bytes) — gate the decode-once
-        # checkpoint on the SOURCE events table instead, the frame dev is
-        # row-for-row proportional to (r12 opt)
-        spread_input=_est_bytes(ev) >= _NARROW_CKPT_MIN_BYTES,
-    ).select("event_type", F.col("p_0").alias("__mad"))
+    mad = exact_percentiles_scalable(dev, "event_type", "__dev", [0.5]).select(
+        "event_type", F.col("p_0").alias("__mad")
+    )
     return (
         dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type")

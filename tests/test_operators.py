@@ -788,6 +788,31 @@ def test_exact_percentiles_scalable_bit_equal(spark, sf_dir):
     assert got == want
 
 
+def test_exact_percentiles_build_jobs_do_not_depend_on_input_size(spark):
+    """Building the percentile plan launches the same eager jobs on a small
+    and on a large input: no arm is picked from a size estimate."""
+    import uuid
+
+    from dataengineering_londonhousingmap_spark.operators.quantiles import (
+        exact_percentiles_scalable,
+    )
+
+    sc = spark.sparkContext
+
+    def build_jobs(n: int) -> int:
+        df = spark.range(n).selectExpr("id % 3 AS g", "CAST(id AS DOUBLE) AS v")
+        group = f"pct-build-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            exact_percentiles_scalable(df, "g", "v", [0.05, 0.5, 0.95])
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert build_jobs(5_000) == build_jobs(400_000)
+
+
 def test_check_suite_verdicts(spark):
     """passed must be computed on the ROUNDED metric and honour the
     threshold comparison exactly."""

@@ -396,13 +396,14 @@ char-8 shingles — the signature-stage work volume — are IDENTICAL
 (current 1,351,090 vs r08's recorded ~1.35M), but the current vintage
 carries 3.8× the LSH candidates (653 vs 172) and 3.6× the verified pairs
 (253 vs 70). The real axis is near-dup PAIR DENSITY feeding the
-verify/expand stages. Falsified by reproduction, not elimination:
-tools/gen_vintage_profile.py rebuilds the SAME corpus at r08's recorded
-profile (surplus pairs broken by a deterministic per-doc char shuffle —
-same length/chars, shingle set randomized; achieved 0 twins / 1.359M
-shingles / 212 candidates / 74 verified), and tools/ab_vintage.py ran
-the trio interleaved best-of-3 on both vintages in ONE session under the
-five drift controls (drift 1.401 that session). Normalized vs the r08
+verify/expand stages. Falsified by reproduction, not elimination: a
+one-off generator rebuilt the SAME corpus at r08's recorded profile
+(surplus pairs broken by a deterministic per-doc char shuffle — same
+length/chars, shingle set randomized; achieved 0 twins / 1.359M
+shingles / 212 candidates / 74 verified), and a one-off A/B ran the
+trio interleaved best-of-3 on both vintages in ONE session under the
+five drift controls (drift 1.401 that session). Both tools are deleted;
+the results stay in AB_VINTAGE_r11.json. Normalized vs the r08
 refs: minhash heavy 1.27× → light 0.69×, ngram 1.11× → 0.93×,
 incremental 1.09× → 0.85× — the residual VANISHES on the r08-profile
 vintage, so it is workload, and the quotient detection aggregate is
@@ -526,10 +527,11 @@ successor-closed emission rule declaratively.
 
 ## r12 — A/B harness drift-gated
 
-AB_VINTAGE_r11 normalized through drift 1.401; ab_vintage now refuses
-to be decided by normalization: it re-runs once in a fresh session when
-the median control ratio leaves [0.8, 1.25], then exits 2 ("REFUSED")
-if still out of band.
+AB_VINTAGE_r11 normalized through drift 1.401; the vintage A/B then
+refused to be decided by normalization: it re-ran once in a fresh
+session when the median control ratio left [0.8, 1.25], then exited 2
+("REFUSED") if still out of band. The same rule holds for any A/B
+decided through drift controls; the vintage A/B itself is deleted.
 
 ## r12 — never put a DISTINCT aggregate beside object-state sketches
 
