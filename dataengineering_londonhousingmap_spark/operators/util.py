@@ -50,9 +50,8 @@ def local_relation(spark, rows, schema) -> DataFrame:
     (exact stats, no job, no python workers at scan). Same rows, same
     schema, same values — only the physical source changes.
 
-    Falls back to the classic path when pandas is unavailable (the
-    driver's vanilla verify session may run without Arrow; correctness is
-    unaffected either way).
+    Falls back to the classic path, with a RuntimeWarning, when the
+    Arrow conversion fails (correctness is unaffected either way).
 
     NULL semantics (ADVICE r12): columns are built with OBJECT dtype so a
     ``None`` mixed into a numeric column survives as SQL NULL — a plain
@@ -61,10 +60,8 @@ def local_relation(spark, rows, schema) -> DataFrame:
     silent environment-dependent divergence. The explicit ``schema`` makes
     the Arrow conversion cast each object column to its declared type.
     """
-    try:
-        import pandas as pd
-    except ImportError:
-        return spark.createDataFrame(rows, schema)
+    import pandas as pd
+
     cols = [f.name for f in schema.fields]
     pdf = pd.DataFrame(
         {

@@ -119,7 +119,11 @@ def cluster_conf(executors: int = 1000, cores_per_executor: int = 5) -> dict[str
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
-        # ~3 waves of post-shuffle tasks; AQE coalesces small ones anyway
+        # ~3 waves of post-shuffle tasks; AQE coalesces small ones anyway.
+        # Also the stream state-store count: the harness caps it at the
+        # cores only on a local master (streaming/incremental.py:
+        # _platform_state_partitions), so on a cluster every stateful
+        # stream keeps this value, frozen by its FIRST checkpoint
         "spark.sql.shuffle.partitions": str(total_cores * 3),
         "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
         "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -155,14 +159,4 @@ def cluster_conf(executors: int = 1000, cores_per_executor: int = 5) -> dict[str
             "RocksDBStateStoreProvider"
         ),
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-        # The local[32] harness NARROWS shuffle partitions around
-        # writeStream.start() (streaming/incremental.py:_few_state_partitions
-        # — 8-16 state stores beat 200 for KB-sized test state). That tuning
-        # must not ship: "session" disables the narrowing so stream state
-        # parallelism follows the session's shuffle partitions; a positive
-        # integer pins it to a deliberate key-cardinality-sized value.
-        # NOTE: a stream's state partitioning is frozen by its FIRST
-        # checkpoint — set this before the stream ever starts, not on
-        # restart.
-        "spark.dataengineering_londonhousingmap_spark.streaming.statePartitions": "session",
     }

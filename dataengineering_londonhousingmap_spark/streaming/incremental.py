@@ -14,15 +14,19 @@ as an actual incremental pipeline:
   lacks (its loads double-insert on retry).
 
 At scale this runs against a file/Kafka source with checkpointing; state
-store size is bounded by the watermark horizon × key cardinality — both
-knobs explicit below. Tests drive finite parquet data through the real
-streaming engine with a memory sink (processAllAvailable = synchronous
-completion).
+store size is bounded by the watermark horizon × key cardinality. The
+number of state stores follows the platform: the session's shuffle
+partitions, capped at the local master's cores (see
+``_platform_state_partitions``). Tests drive finite parquet data through
+the real streaming engine with a memory sink (processAllAvailable =
+synchronous completion).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -87,16 +91,18 @@ def hourly_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
 
 
 @contextmanager
-def _few_state_partitions(spark: SparkSession, n: int = 8):
-    """Scope ``spark.sql.shuffle.partitions`` down around
-    ``writeStream.start()``: the stream execution CLONES the session conf at
-    start, and every stateful operator creates one state-store instance per
-    shuffle partition per micro-batch. These harness streams carry KB-sized
-    keyed state, so 32-200 state stores per batch is pure constant overhead
-    (observed: most of the stream queries' wall time). Restored immediately
-    after start — batch queries in the same session never see the narrowed
-    conf. A real deployment sizes this to its key cardinality through its
-    own session conf / existing checkpoint instead.
+def _platform_state_partitions(spark: SparkSession):
+    """Cap ``spark.sql.shuffle.partitions`` at the local master's cores
+    around ``writeStream.start()``. The stream execution CLONES the session
+    conf at start, and every stateful operator creates one state-store
+    instance per shuffle partition per micro-batch, so on a local master
+    any partition beyond ``defaultParallelism`` is a state store that
+    waits for a core (a vanilla local[4] session's 200 made q_stream_hourly
+    ~8× slower). A session already at or below its cores — every
+    ``get_session`` session — is left untouched, and on any other master
+    state parallelism is the session's shuffle partitions as they are: a
+    cluster sizes it to key cardinality through its own conf. A stream's
+    state partitioning is frozen by its first checkpoint.
 
     NOT concurrency-safe: the narrow-and-restore mutates session-global
     conf, so two streams started concurrently from one session (or a batch
@@ -107,37 +113,15 @@ def _few_state_partitions(spark: SparkSession, n: int = 8):
     wrong setting. The check is a real RuntimeError (an ``assert`` would
     be compiled out under ``python -O``), and the original value is
     restored BEFORE raising — a detected race must never leave the
-    session conf narrowed for every subsequent batch query.
-
-    Cluster override (r10):
-    ``spark.dataengineering_londonhousingmap_spark.streaming.statePartitions`` — set to
-    ``"session"`` to DISABLE the narrowing (state parallelism follows the
-    session's shuffle partitions; what cluster_conf ships, so the local
-    harness tuning never leaks into a deployment), or to a positive
-    integer to pin state partitions to a deliberate key-cardinality-sized
-    value. A stream's state partitioning is frozen by its first
-    checkpoint, so the override matters at first start, not restart."""
+    session conf narrowed for every subsequent batch query."""
     key = "spark.sql.shuffle.partitions"
-    override = str(
-        spark.conf.get("spark.dataengineering_londonhousingmap_spark.streaming.statePartitions", "")
-    ).strip().lower()
-    if override == "session":
+    sc = spark.sparkContext
+    old = spark.conf.get(key)
+    cores = sc.defaultParallelism
+    if not sc.master.startswith("local") or int(old) <= cores:
         yield
         return
-    if override:
-        # any other non-empty value is a misconfig, and a silent
-        # fall-through to the local-harness n=8 would be exactly the
-        # test-tuning leak this knob exists to prevent — worse, state
-        # partitioning freezes at the stream's first checkpoint, so the
-        # wrong value would be sticky. Fail loudly instead (r11).
-        if not (override.isdigit() and int(override) > 0):
-            raise ValueError(
-                "spark.dataengineering_londonhousingmap_spark.streaming.statePartitions must be "
-                f"'session' or a positive integer, got {override!r}"
-            )
-        n = int(override)
-    old = spark.conf.get(key)
-    token = str(n)
+    token = str(cores)
     spark.conf.set(key, token)
     try:
         yield
@@ -146,7 +130,7 @@ def _few_state_partitions(spark: SparkSession, n: int = 8):
         spark.conf.set(key, old)
         if current != token:
             raise RuntimeError(
-                f"{key} changed inside a _few_state_partitions block "
+                f"{key} changed inside a _platform_state_partitions block "
                 f"(expected {token!r}, found {current!r}) — a concurrent "
                 f"conf writer raced the stream-start scope; original "
                 f"value {old!r} has been restored"
@@ -171,6 +155,32 @@ def _link_batch(prep_dir: str, dst_dir: str) -> None:
     for f in os.listdir(prep_dir):
         if f.endswith(".parquet"):
             os.link(os.path.join(prep_dir, f), os.path.join(dst_dir, f))
+
+
+def _two_batch_stream(
+    spark: SparkSession,
+    batch_a: DataFrame,
+    batch_b: DataFrame,
+    stage_dir: str,
+    schema: T.StructType | str,
+) -> tuple[DataFrame, Callable[[], None]]:
+    """Stage two batches under ``stage_dir`` and land batch a in a fresh
+    input dir. Returns the file-source stream over that dir and the
+    callable that lands batch b — what the two-batch replay harnesses pass
+    as ``run_stream_to_memory``'s ``arrive``."""
+    in_dir = os.path.join(stage_dir, "in")
+    shutil.rmtree(in_dir, ignore_errors=True)
+    _stage_once(batch_a, os.path.join(stage_dir, "prep_a"))
+    _stage_once(batch_b, os.path.join(stage_dir, "prep_b"))
+    _link_batch(os.path.join(stage_dir, "prep_a"), os.path.join(in_dir, "batch_a"))
+    stream = (
+        spark.readStream.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(in_dir)
+    )
+    return stream, lambda: _link_batch(
+        os.path.join(stage_dir, "prep_b"), os.path.join(in_dir, "batch_b")
+    )
 
 
 def late_data_rollup(
@@ -198,43 +208,21 @@ def late_data_rollup(
     At scale this is the production shape directly: file/Kafka source,
     watermarked tumbling agg, idempotent sink; the two-batch feed is only
     the test harness' way of pinning batch boundaries."""
-    import shutil
-
-    in_dir = os.path.join(stage_dir, "in")
-    shutil.rmtree(in_dir, ignore_errors=True)
     ev = events_batch.select("event_id", "ts", "event_type", "value")
-    _stage_once(ev.filter(F.col("event_id") % 2 == 0), os.path.join(stage_dir, "prep_a"))
-    _stage_once(ev.filter(F.col("event_id") % 2 == 1), os.path.join(stage_dir, "prep_b"))
-    _link_batch(os.path.join(stage_dir, "prep_a"), os.path.join(in_dir, "batch_a"))
-
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, event_type string, value double")
-        .option("recursiveFileLookup", "true")
-        .parquet(in_dir)
+    stream, arrive_b = _two_batch_stream(
+        spark,
+        ev.filter(F.col("event_id") % 2 == 0),
+        ev.filter(F.col("event_id") % 2 == 1),
+        stage_dir,
+        "event_id long, ts timestamp, event_type string, value double",
     )
     agg = (
         stream.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("__n"), F.sum("value").alias("__sum"))
     )
-    # best-effort replace of a stale sink view from a prior run —
-    # dropTempView returns False (never raises) when the view is absent
-    spark.catalog.dropTempView(sink_name)
-    with _few_state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("update")
-            .start()
-        )
-    try:
-        q.processAllAvailable()  # batch 1: establishes the watermark
-        _link_batch(os.path.join(stage_dir, "prep_b"), os.path.join(in_dir, "batch_b"))
-        q.processAllAvailable()  # batch 2: late rows dropped by the engine
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    sunk = spark.table(sink_name)
+    # batch 1 establishes the watermark; the engine drops batch 2's late rows
+    sunk = run_stream_to_memory(agg, sink_name, "update", arrive=arrive_b)
     final = (
         sunk.groupBy("w", "event_type")
         .agg(F.max(F.struct("__n", "__sum")).alias("__m"))
@@ -271,43 +259,15 @@ def dedup_two_batch_replay(
         (``state_ts + delay <= wm`` — equality expires) is EMITTED AGAIN —
         the documented at-least-once caveat of watermark-bounded dedup
         state, usually invisible in single-batch tests."""
-    import shutil
-
-    in_dir = os.path.join(stage_dir, "in")
-    shutil.rmtree(in_dir, ignore_errors=True)
     # watermarks require TIMESTAMP (with zone); the testdata vintage may
     # read as TIMESTAMP_NTZ — exact cast under the pinned UTC session
     batch_a = batch_a.withColumn("ts", F.col("ts").cast("timestamp"))
     batch_b = batch_b.withColumn("ts", F.col("ts").cast("timestamp"))
-    schema = batch_a.schema
-    _stage_once(batch_a, os.path.join(stage_dir, "prep_a"))
-    _stage_once(batch_b, os.path.join(stage_dir, "prep_b"))
-    _link_batch(os.path.join(stage_dir, "prep_a"), os.path.join(in_dir, "batch_a"))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(in_dir)
-    )
+    stream, arrive_b = _two_batch_stream(spark, batch_a, batch_b, stage_dir, batch_a.schema)
     dd = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark([key_col])
-    # best-effort replace of a stale sink view from a prior run —
-    # dropTempView returns False (never raises) when the view is absent
-    spark.catalog.dropTempView(sink_name)
-    with _few_state_partitions(spark):
-        q = (
-            dd.writeStream.format("memory")
-            .queryName(sink_name)
-            .outputMode("append")
-            .start()
-        )
-    try:
-        q.processAllAvailable()  # batch 1: seeds state + watermark
-        _link_batch(os.path.join(stage_dir, "prep_b"), os.path.join(in_dir, "batch_b"))
-        q.processAllAvailable()  # batch 2: late drop / dedup / re-admission
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-    return spark.table(sink_name)
+    # batch 1 seeds state and the watermark; batch 2 meets late drop,
+    # dedup and re-admission
+    return run_stream_to_memory(dd, sink_name, "append", arrive=arrive_b)
 
 
 def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -422,10 +382,8 @@ def _is_path_not_found(e: Exception) -> bool:
     upsert sink FAIL instead of bootstrapping the table (round-8 advisor).
     The message substrings remain as a last-resort fallback for engines
     that predate error classes."""
-    try:
-        from pyspark.errors import AnalysisException
-    except ImportError:  # very old PySpark: fall through to substrings
-        AnalysisException = ()
+    from pyspark.errors import AnalysisException
+
     if isinstance(e, AnalysisException):
         for attr in ("getCondition", "getErrorClass"):  # 4.x name, then 3.x
             get = getattr(e, attr, None)
@@ -454,7 +412,7 @@ def start_parquet_sink(df: DataFrame, sink_dir: str, checkpoint_dir: str):
     executemany retry double-inserts). Returns the started query; callers
     ``awaitTermination()``.
     """
-    with _few_state_partitions(df.sparkSession):
+    with _platform_state_partitions(df.sparkSession):
         return (
             df.writeStream.format("parquet")
             .option("path", sink_dir)
@@ -590,7 +548,7 @@ def start_upsert_sink(
             fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
             fs.delete(jpath, True)
 
-    with _few_state_partitions(df.sparkSession):
+    with _platform_state_partitions(df.sparkSession):
         return (
             df.writeStream.foreachBatch(apply_batch)
             .option("checkpointLocation", checkpoint_dir)
@@ -603,16 +561,21 @@ def run_stream_to_memory(
     df: DataFrame,
     name: str,
     output_mode: str,
+    *,
+    arrive: Callable[[], None] | None = None,
 ) -> DataFrame:
     """Drive a finite streaming DataFrame to completion against a memory
     sink and return the materialized result (test/driver harness — a real
     deployment writes to a partitioned Parquet/Delta sink with a
-    checkpointLocation instead)."""
+    checkpointLocation instead). ``arrive``, when given, lands a second
+    batch in the source after the first drain; the stream is then drained
+    again, so the second micro-batch meets the watermark and state the
+    first one left."""
     spark = df.sparkSession
     # best-effort replace of a stale sink view from a prior run —
     # dropTempView returns False (never raises) when the view is absent
     spark.catalog.dropTempView(name)
-    with _few_state_partitions(spark):
+    with _platform_state_partitions(spark):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -621,11 +584,13 @@ def run_stream_to_memory(
         )
     try:
         q.processAllAvailable()
+        if arrive is not None:
+            arrive()
+            q.processAllAvailable()
     finally:
         q.stop()
         q.awaitTermination(30)
     return spark.table(name)
-
 
 
 def sliding_rollup_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:

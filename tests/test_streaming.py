@@ -523,13 +523,19 @@ def test_late_data_rollup_drop_boundary(spark, tmp_path):
 def test_stream_harness_restores_shuffle_partitions(spark, sf_dir):
     """The narrowed state-partition conf is scoped to writeStream.start();
     a leak would silently shrink every subsequent batch shuffle in the
-    session (the conf is session-global)."""
+    session (the conf is session-global). The session value is set above
+    the core count so the scope really narrows."""
     from dataengineering_londonhousingmap_spark.queries import QUERIES
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    QUERIES["q_stream_hourly"](spark, sf_dir).count()
-    assert spark.conf.get(key) == before
+    wide = str(spark.sparkContext.defaultParallelism * 8)
+    spark.conf.set(key, wide)
+    try:
+        QUERIES["q_stream_hourly"](spark, sf_dir).count()
+        assert spark.conf.get(key) == wide
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_stream_harness_raced_conf_restores_then_raises(spark):
@@ -541,93 +547,74 @@ def test_stream_harness_raced_conf_restores_then_raises(spark):
     import pytest
 
     from dataengineering_londonhousingmap_spark.streaming.incremental import (
-        _few_state_partitions,
+        _platform_state_partitions,
     )
 
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    with pytest.raises(RuntimeError, match="raced the stream-start scope"):
-        with _few_state_partitions(spark, 8):
-            spark.conf.set(key, "5")  # the racing writer
-    assert spark.conf.get(key) == before
-
-
-def test_state_partitions_override_session_disables_narrowing(spark):
-    """r10 cluster posture: statePartitions='session' (what cluster_conf
-    ships) must make _few_state_partitions a no-op so the local-harness
-    narrowing never leaks into a deployment's stream state layout."""
-    from dataengineering_londonhousingmap_spark.streaming.incremental import (
-        _few_state_partitions,
-    )
-
-    key = "spark.sql.shuffle.partitions"
-    flag = "spark.dataengineering_londonhousingmap_spark.streaming.statePartitions"
-    before = spark.conf.get(key)
-    spark.conf.set(flag, "session")
+    wide = str(spark.sparkContext.defaultParallelism * 8)
+    spark.conf.set(key, wide)
     try:
-        with _few_state_partitions(spark, 8):
-            assert spark.conf.get(key) == before
+        with pytest.raises(RuntimeError, match="raced the stream-start scope"):
+            with _platform_state_partitions(spark):
+                assert spark.conf.get(key) == str(spark.sparkContext.defaultParallelism)
+                spark.conf.set(key, "5")  # the racing writer
+        assert spark.conf.get(key) == wide
     finally:
-        spark.conf.unset(flag)
-    assert spark.conf.get(key) == before
+        spark.conf.set(key, before)
 
 
-def test_state_partitions_override_integer_pins_value(spark):
-    """A positive-integer override pins stream state parallelism to a
-    deliberate key-cardinality-sized value, beating the call-site default;
-    the session conf is restored afterwards."""
-    from dataengineering_londonhousingmap_spark.streaming.incremental import (
-        _few_state_partitions,
-    )
+def test_stream_state_partitions_follow_platform(spark, tmp_path):
+    """A stateful stream's state-store count is the session's shuffle
+    partitions capped at the local master's cores: 4 on this local[8]
+    session stays 4, 64 runs as 8 and the session still reads 64 after.
+    Read from the stream's own progress, as a StreamingQueryListener sees
+    it."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    src = str(tmp_path / "src")
+    spark.range(40).selectExpr("id % 5 AS k").coalesce(1).write.parquet(src)
+    seen = []
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            seen.extend(op.numShufflePartitions for op in event.progress.stateOperators)
 
     key = "spark.sql.shuffle.partitions"
-    flag = "spark.dataengineering_londonhousingmap_spark.streaming.statePartitions"
     before = spark.conf.get(key)
-    spark.conf.set(flag, "24")
+    cores = spark.sparkContext.defaultParallelism
+    assert cores == 8
+    listener = Listener()
+    spark.streams.addListener(listener)
     try:
-        with _few_state_partitions(spark, 8):
-            assert spark.conf.get(key) == "24"
+        for session_value, expected in (("4", 4), ("64", 8)):
+            spark.conf.set(key, session_value)
+            seen.clear()
+            stream = spark.readStream.schema("k long").parquet(src)
+            out = run_stream_to_memory(
+                stream.groupBy("k").count(), "t_state_partitions", "complete"
+            )
+            assert out.count() == 5
+            spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+            assert seen and set(seen) == {expected}
+            assert spark.conf.get(key) == session_value
     finally:
-        spark.conf.unset(flag)
-    assert spark.conf.get(key) == before
-
-
-def test_state_partitions_override_invalid_raises(spark):
-    """ADVICE r10: an unrecognized statePartitions value must raise, not
-    silently fall through to the local-harness n=8 narrowing — state
-    partitioning freezes at the stream's first checkpoint, so a silent
-    misconfig would be sticky."""
-    import pytest
-
-    from dataengineering_londonhousingmap_spark.streaming.incremental import (
-        _few_state_partitions,
-    )
-
-    key = "spark.sql.shuffle.partitions"
-    flag = "spark.dataengineering_londonhousingmap_spark.streaming.statePartitions"
-    before = spark.conf.get(key)
-    for bad in ("none", "0", "-4", "1 6", "eight"):
-        spark.conf.set(flag, bad)
-        try:
-            with pytest.raises(ValueError, match="statePartitions"):
-                with _few_state_partitions(spark, 8):
-                    pass  # pragma: no cover — must not enter
-        finally:
-            spark.conf.unset(flag)
-        assert spark.conf.get(key) == before
-    # the documented tolerant spellings still work: strip/lower
-    spark.conf.set(flag, "  Session ")
-    try:
-        with _few_state_partitions(spark, 8):
-            assert spark.conf.get(key) == before
-    finally:
-        spark.conf.unset(flag)
+        spark.streams.removeListener(listener)
+        spark.conf.set(key, before)
 
 
 def test_cluster_conf_ships_rocksdb_state_store():
     """The documented 1000-executor posture must carry the RocksDB state
-    store + changelog checkpointing and disable the local state-partition
-    narrowing — the r10 'local tuning must not ship' contract."""
+    store + changelog checkpointing."""
     from dataengineering_londonhousingmap_spark.session import cluster_conf
 
     conf = cluster_conf()
@@ -638,7 +625,6 @@ def test_cluster_conf_ships_rocksdb_state_store():
         conf["spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"]
         == "true"
     )
-    assert conf["spark.dataengineering_londonhousingmap_spark.streaming.statePartitions"] == "session"
 
 
 def test_is_path_not_found_classifies_structurally(spark, tmp_path):

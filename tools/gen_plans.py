@@ -35,8 +35,8 @@ STREAMING = {
 
 HEADER = '''# PLANS — physical plan evidence for the headline queries
 
-Auto-generated from `.explain("formatted")` at sf0.1 on the tuned local
-session (`python tools/gen_plans.py` regenerates). Operator lines only
+Auto-generated from `.explain("formatted")` on the tuned local session
+(`python tools/gen_plans.py` regenerates). Operator lines only
 (details elided); the things to check: scans carry `PushedFilters`/pruned
 `ReadSchema`, dim joins are `BroadcastHashJoin`, aggregates are
 partial+final `HashAggregate`, no `BatchEvalPython` (row-wise Python)
@@ -372,17 +372,17 @@ matrix and split-leakage conversions).
 
 ## r10 — streaming state posture for real clusters
 
-The local[32] harness narrows shuffle partitions around
-writeStream.start() (8–16 state stores beat 200 for KB-sized test state)
-— that tuning must not ship. cluster_conf() now carries the deployment
-posture: RocksDB state store (keyed state off-heap + local disk, not the
-HDFSBackedStateStore all-versions-in-heap OOM shape) with changelog
-checkpointing (per-batch deltas, not full snapshots), and
-spark.dataengineering_londonhousingmap_spark.streaming.statePartitions="session", which makes
-_few_state_partitions a no-op so stream state parallelism follows the
-session's shuffle partitions; a positive integer pins it to a deliberate
-key-cardinality-sized value instead. State partitioning freezes at a
-stream's FIRST checkpoint — the knob matters at first start, not restart.
+Stream state partitions follow the platform, with no knob: on a local
+master the harness caps the session's shuffle partitions at the cores
+around writeStream.start() (a vanilla local[4] session's 200 state
+stores made q_stream_hourly ~8× slower), and on any other master the
+session's shuffle partitions are used as they are, so no local tuning
+ships. cluster_conf() carries the deployment posture: RocksDB state
+store (keyed state off-heap + local disk, not the HDFSBackedStateStore
+all-versions-in-heap OOM shape) with changelog checkpointing (per-batch
+deltas, not full snapshots); its shuffle partitions size stream state
+to key cardinality. State partitioning freezes at a stream's FIRST
+checkpoint — the session value matters at first start, not restart.
 transformWithStateInPandas remains environment-blocked (broken container
 protobuf); the canary test flips loud when it's fixed.
 
@@ -423,7 +423,7 @@ partition, so parallelism is capped there: 8/16/32 partitions ran
 within-noise 5.5/7.1/5.2 s at sf0.1, where the batch is small). Local
 pin switched from 16 to sparkContext.defaultParallelism (output
 partition-independent — oracle re-verified on local[8]); clusters size
-state via the statePartitions session knob as before. The residual
+state through their own shuffle partitions. The residual
 ~11.5 s at 32 partitions is the irreducible Python-per-group cost of
 951,630 emitted sessions over 15k keys — no plan defect. The matrix
 is kept in STREAM_PROFILE_r11.json; its one-off profiling tool was
@@ -613,7 +613,10 @@ inside ±10 % ever shows the minhash ratio above 1.5.
 def main() -> None:
     spark = get_session("plans")
     spark.sparkContext.setLogLevel("ERROR")
-    out = [HEADER]
+    # the master (core count) and data dir shape the plans; record them so
+    # a later diff against this file can tell drift from a different host
+    title, notes = HEADER.split("\n\n", 1)
+    out = [f"{title}\n\nSession master `{spark.sparkContext.master}`, data `{SF}`.\n\n{notes}"]
     for name in HEADLINE:
         if name in STREAMING:
             out.append(
