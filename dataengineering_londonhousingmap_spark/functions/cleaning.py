@@ -67,16 +67,27 @@ def extract_int(col: Column | str, default: int) -> Column:
 # distance / transport parsing
 # ---------------------------------------------------------------------------
 
+_MILES = " miles "
+
+
 def split_miles(col: Column | str) -> tuple[Column, Column]:
     """F5 — ``"0.3 miles Angel"`` → (0.3, "Angel").
 
     Reference: pipeline .py:253-257; rows without ``' miles '`` have NULL
     second element (the reference skips them — P7).
+
+    Exactly the first two parts of ``split(c, ' miles ')``, found by
+    literal search: ``split`` reaches Java's ``String.split``, which
+    compiles a regex Pattern for every row when the delimiter is longer
+    than one character. The station is the text after the first delimiter
+    up to the next one, so overlapping occurrences ("a miles miles b")
+    split the same way the regex does.
     """
     c = F.col(col) if isinstance(col, str) else col
-    parts = F.split(c, " miles ")
-    dist = F.when(F.size(parts) >= 2, F.element_at(parts, 1).try_cast("double"))
-    station = F.when(F.size(parts) >= 2, F.element_at(parts, 2))
+    has = c.contains(_MILES)
+    dist = F.when(has, F.substring_index(c, _MILES, 1).try_cast("double"))
+    rest = F.substr(c, F.instr(c, _MILES) + F.lit(len(_MILES)))
+    station = F.when(has, F.substring_index(rest, _MILES, 1))
     return dist, station
 
 

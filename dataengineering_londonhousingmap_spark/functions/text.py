@@ -43,17 +43,9 @@ def token_count(col: Column | str) -> Column:
     return F.when(c.isNull(), F.lit(None).cast("int")).otherwise(F.size(tokens(c)))
 
 
+# BPE-ish token pattern (a cheap subword-tokenizer proxy): alpha runs, digit
+# runs and each punctuation char count separately.
 _BPE_ISH = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\f\r\x0b]"
-
-
-def bpe_ish_token_count(col: Column | str) -> Column:
-    """BPE-ish token estimate: alpha runs + digit runs + each punctuation
-    char count separately (a cheap proxy for subword tokenizers).
-    NULL text → NULL (same size(NULL)=-1 guard as token_count)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isNull(), F.lit(None).cast("int")).otherwise(
-        F.size(F.regexp_extract_all(c, F.lit(_BPE_ISH), 0))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -254,14 +246,18 @@ def bigrams(col: Column | str) -> Column:
     return F.when(n >= 2, pairs).otherwise(F.array().cast("array<string>"))
 
 
-def rolling_hash(col: Column | str, base: int = 31, mod: int = 1_000_000_007) -> Column:
+_HASH_BASE = 31
+_HASH_MOD = 1_000_000_007
+
+
+def rolling_hash(col: Column | str) -> Column:
     """Polynomial rolling hash over characters (Rabin-Karp style), computed
     with a higher-order aggregate — demonstrates order-sensitive folds as
-    pure Catalyst expressions. h = (h*base + ascii(ch)) % mod."""
+    pure Catalyst expressions. h = (h*31 + ascii(ch)) % 1_000_000_007."""
     c = F.col(col) if isinstance(col, str) else col
     chars = F.split(c, "")
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
+        lambda acc, ch: (acc * _HASH_BASE + F.ascii(ch)) % _HASH_MOD,
     )

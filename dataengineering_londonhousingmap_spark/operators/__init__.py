@@ -6,7 +6,6 @@ from .reshape import (  # noqa: F401
     unpivot_yesno,
 )
 from .dedup import (  # noqa: F401
-    dedup_exact,
     dedup_by_fingerprint,
     minhash_signatures,
     lsh_candidate_pairs,

@@ -24,12 +24,6 @@ from .util import fan_out, materialize
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def dedup_exact(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """O2/O3 — whole-row or keyed dropDuplicates (arbitrary survivor).
-    Reference: pipeline .py:448; mapping notebook:232."""
-    return df.dropDuplicates(subset) if subset else df.dropDuplicates()
-
-
 def dedup_first_seen(df: DataFrame, key: str, order: list[str]) -> DataFrame:
     """O4 — first-occurrence-wins dedup (pipeline .py:215-216 ``if ad_id in
     map: continue``). The reference depends on scrape order; here the order
@@ -302,6 +296,10 @@ def excise_spans(
 # dominant cost at corpus scale). Constants derived deterministically from
 # md5 so the DuckDB oracle regenerates the identical family.
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne); a·x+b stays inside int64
+# every catalog near-dup query bands 16 MinHashes into 4 bands of 4 rows
+_NUM_HASHES = 16
+_BANDS = 4
+_ROWS_PER_BAND = _NUM_HASHES // _BANDS
 
 def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     import hashlib
@@ -314,16 +312,13 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signatures(
-    shingles: DataFrame,
-    id_col: str,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """MinHash signature per document: base = int64 of the md5-hex prefix of
-    the shingle (bit-identical in every engine), signature_i = min over
-    shingles of (aᵢ·base + bᵢ) mod P.
+def minhash_signatures(shingles: DataFrame, id_col: str) -> DataFrame:
+    """MinHash signature per document (``_NUM_HASHES`` = 16 columns
+    mh0..mh15): base = int64 of the md5-hex prefix of the shingle
+    (bit-identical in every engine), signature_i = min over shingles of
+    (aᵢ·base + bᵢ) mod P.
 
-    One groupBy with ``num_hashes`` min-aggregates — partial aggregation
+    One groupBy with 16 min-aggregates — partial aggregation
     makes this a single shuffle of (doc → signature) regardless of corpus
     size; one md5 per shingle total.
     """
@@ -340,43 +335,40 @@ def minhash_signatures(
     # nodes), so signatures are bit-identical.
     aggs = [
         F.expr(f"min(({a} * __h + {b}) % {MINHASH_P}) AS mh{i}")
-        for i, (a, b) in enumerate(_minhash_coeffs(num_hashes))
+        for i, (a, b) in enumerate(_minhash_coeffs(_NUM_HASHES))
     ]
     return with_h.groupBy(id_col).agg(*aggs)
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """LSH banding: split the signature into ``bands`` bands of
-    ``num_hashes/bands`` rows; documents sharing any band hash are candidate
-    near-duplicates. Output: (id_a, id_b) with id_a < id_b, distinct.
+def _to_bands(sig: DataFrame, id_expr, out_id: str) -> DataFrame:
+    """Long (out_id, band_idx, band_hash) rows of a signature frame whose id
+    column ``id_expr`` is named ``out_id``: each of the 4 bands is the md5
+    of its 4 signature rows. One parsed SQL string per band (vs ~2+rows
+    py4j calls each) — same expression tree, construction-wall only (r12
+    opt)."""
+    band_cols = [
+        F.expr(
+            "md5(concat_ws('|', "
+            + ", ".join(f"mh{b * _ROWS_PER_BAND + r}" for r in range(_ROWS_PER_BAND))
+            + f")) AS band{b}"
+        )
+        for b in range(_BANDS)
+    ]
+    return sig.select(id_expr, *band_cols).unpivot(
+        [out_id], [f"band{b}" for b in range(_BANDS)], "band_idx", "band_hash"
+    )
+
+
+def lsh_candidate_pairs(signatures: DataFrame, id_col: str) -> DataFrame:
+    """LSH banding: split the 16-row signature into 4 bands of 4 rows;
+    documents sharing any band hash are candidate near-duplicates. Output:
+    (id_a, id_b) with id_a < id_b, distinct.
 
     The plan is explode-to-bands → self-equi-join on (band_idx, band_hash):
     a shuffle join on uniformly-distributed md5 keys — the scalable LSH
     shape (no pairwise comparison until the candidate set).
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must divide evenly into bands "
-            f"({bands}) — trailing hashes would be silently ignored"
-        )
-    rows_per_band = num_hashes // bands
-    # one parsed SQL string per band (vs ~2+rows_per_band py4j calls each)
-    # — same expression tree, construction-wall only (r12 opt)
-    band_cols = [
-        F.expr(
-            "md5(concat_ws('|', "
-            + ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
-            + f")) AS band{b}"
-        )
-        for b in range(bands)
-    ]
-    banded = signatures.select(F.col(id_col), *band_cols)
-    long = banded.unpivot([id_col], [f"band{b}" for b in range(bands)], "band_idx", "band_hash")
+    long = _to_bands(signatures, F.col(id_col), id_col)
     # both self-join sides replay the signature groupBy (a full shuffle of
     # the shingle explode) without a cut — aliases differ, so no
     # ReusedExchange. The banded frame is docs×bands rows of (id, hash):
@@ -510,8 +502,6 @@ def lsh_candidate_pairs_against(
     sig_new: DataFrame,
     sig_index: DataFrame,
     id_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
 ) -> DataFrame:
     """LSH banding of NEW documents against a standing INDEX — the
     incremental-ingest dedup shape: band both signature sets, equi-join
@@ -521,29 +511,8 @@ def lsh_candidate_pairs_against(
     100 TB standing corpus without rescanning it pairwise. Output:
     distinct (id_a = new id, id_b = index id).
     """
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must divide evenly into bands ({bands})"
-        )
-    rows_per_band = num_hashes // bands
-
-    def to_bands(sig: DataFrame, out_id: str) -> DataFrame:
-        # parsed-SQL band expressions — see lsh_candidate_pairs (r12 opt)
-        band_cols = [
-            F.expr(
-                "md5(concat_ws('|', "
-                + ", ".join(f"mh{b * rows_per_band + r}" for r in range(rows_per_band))
-                + f")) AS band{b}"
-            )
-            for b in range(bands)
-        ]
-        banded = sig.select(F.col(id_col).alias(out_id), *band_cols)
-        return banded.unpivot(
-            [out_id], [f"band{b}" for b in range(bands)], "band_idx", "band_hash"
-        )
-
-    a = to_bands(sig_new, "id_a")
-    b = to_bands(sig_index, "id_b")
+    a = _to_bands(sig_new, F.col(id_col).alias("id_a"), "id_a")
+    b = _to_bands(sig_index, F.col(id_col).alias("id_b"), "id_b")
     # merge hint: the INDEX side is the standing corpus — the one side that
     # must never be chosen as a broadcast build, whatever the stats say
     return (
@@ -1155,11 +1124,13 @@ def quotient_expand_pairs(
     )
 
 
+_CC_MAX_ITERS = 25
+
+
 def connected_components(
     vertices: DataFrame,
     edges: DataFrame,
     id_col: str,
-    max_iters: int = 25,
 ) -> DataFrame:
     """Connected components by min-label propagation — the cluster step a
     production dedup needs after pairwise near-dup detection: pairs (A,B),
@@ -1184,7 +1155,7 @@ def connected_components(
     instead of two. A diameter-300
     near-dup chain (adversarially long, but real corpora produce them)
     converges in ~10 rounds where plain min-propagation needs 299 and
-    would blow the iteration bound. Raises if ``max_iters`` is hit without
+    would blow the iteration bound. Raises if ``_CC_MAX_ITERS`` is hit without
     convergence rather than returning a silently-wrong partial clustering
     (2^25 diameter is unreachable in practice).
     """
@@ -1215,7 +1186,7 @@ def connected_components(
         .transform(materialize, eager=False)
     )
     converged = None
-    for it in range(max_iters):
+    for it in range(_CC_MAX_ITERS):
         msgs = e.join(labels, e["src"] == labels["id"]).select(
             F.col("dst").alias("id"), F.col("label"), F.lit(None).cast("long").alias("old")
         )
@@ -1274,8 +1245,8 @@ def connected_components(
             break
     if converged is None:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iters} iterations — "
-            "component diameter exceeds the bound; raise max_iters"
+            f"connected_components did not converge in {_CC_MAX_ITERS} iterations — "
+            "component diameter exceeds the bound; raise _CC_MAX_ITERS"
         )
     isolated = vertices.select(F.col(id_col).alias("id")).join(
         converged.select("id"), "id", "left_anti"

@@ -440,40 +440,28 @@ def salted_join(
     right: DataFrame,
     key: str,
     salt: int = 8,
-    how: str = "inner",
-    salt_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Skew-busting equi-join: the big ``left`` side gets a deterministic
-    salt (murmur hash of the key plus a NARROW discriminator set, mod
-    ``salt`` — engine-internal, it never crosses to the oracle) appended to
-    the key; the small ``right`` side is exploded ×``salt`` so every salted
-    key still matches. A hot key's rows now spread over ``salt`` shuffle
-    partitions instead of one straggler task. Result is row-identical to
-    the plain join for the supported join types.
+    """Skew-busting inner equi-join: the big ``left`` side gets a
+    deterministic salt (murmur hash of the key plus a NARROW discriminator
+    set, mod ``salt`` — engine-internal, it never crosses to the oracle)
+    appended to the key; the small ``right`` side is exploded ×``salt`` so
+    every salted key still matches. A hot key's rows now spread over
+    ``salt`` shuffle partitions instead of one straggler task. Result is
+    row-identical to the plain inner join.
 
-    ``salt_cols`` picks the discriminators (default: the first two non-key
-    columns in schema order). Any deterministic per-row value is CORRECT —
-    the join still matches on (key, salt) against the exploded right — so
-    hashing the full row would only burn CPU: on a wide fact table that is
-    per-row hashing of the whole payload when the key plus one or two
-    columns spreads hot keys just as well. A key-only left (no
-    discriminators) degenerates to salt = hash(key) — no spread, still
-    correct.
-
-    Only left-preserving joins are supported: under right/full-outer the
-    exploded right copies that find no partner would each survive as a
-    null-padded row (×salt inflation), so those types raise.
+    The discriminators are the first two non-key columns in schema order.
+    Any deterministic per-row value is CORRECT — the join still matches on
+    (key, salt) against the exploded right — so hashing the full row would
+    only burn CPU: on a wide fact table that is per-row hashing of the
+    whole payload when the key plus one or two columns spreads hot keys
+    just as well. A key-only left (no discriminators) degenerates to salt =
+    hash(key) — no spread, still correct.
 
     Use when a handful of keys dominate (the reference's analog: every
     listing near King's Cross) and AQE's skew-join split isn't available or
     isn't enough. Right side grows ×salt — keep it the dimension side.
     """
-    if how not in ("inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi", "left_anti", "leftanti"):
-        raise ValueError(
-            f"salted_join supports left-preserving joins only, got {how!r}: "
-            "right/full outer would inflate unmatched right rows x salt"
-        )
-    disc = salt_cols if salt_cols is not None else [c for c in left.columns if c != key][:2]
+    disc = [c for c in left.columns if c != key][:2]
     lsalt = F.pmod(
         F.abs(F.hash(F.col(key), *[F.col(c) for c in disc])), F.lit(salt)
     ).alias("__salt")
@@ -481,7 +469,7 @@ def salted_join(
     r = right.select(
         "*", F.explode(F.array(*[F.lit(i) for i in range(salt)])).alias("__salt")
     )
-    return l.join(r, [key, "__salt"], how).drop("__salt")
+    return l.join(r, [key, "__salt"]).drop("__salt")
 
 
 def range_join(

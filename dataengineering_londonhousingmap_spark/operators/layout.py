@@ -46,28 +46,24 @@ def morton_key(a: Column, b: Column) -> Column:
     return spread_bits(a).bitwiseOR(F.shiftleft(spread_bits(b), 1))
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 16,
-    key_bits: int = 16,
-) -> None:
-    """Rewrite ``df`` as ``n_files`` Parquet files clustered on the Morton
-    interleave of ``col_a``/``col_b`` (each taken mod 2^key_bits).
+_N_FILES = 16
+_KEY_MOD = 1 << 16  # each dimension's low 16 bits feed the 32-bit key
+
+
+def zorder_write(df: DataFrame, path: str, col_a: str, col_b: str) -> None:
+    """Rewrite ``df`` as ``_N_FILES`` (16) Parquet files clustered on the
+    Morton interleave of ``col_a``/``col_b`` (each taken mod 2^16).
 
     ``repartitionByRange`` on the key gives contiguous key ranges per file
     (= compact rectangles in (a, b) space); the within-partition sort
     tightens per-row-group stats too. The key is engine-internal — it is
     dropped before the write so the stored schema is unchanged.
     """
-    m = 1 << key_bits
     keyed = df.withColumn(
-        "__z", morton_key(F.col(col_a) % m, F.col(col_b) % m)
+        "__z", morton_key(F.col(col_a) % _KEY_MOD, F.col(col_b) % _KEY_MOD)
     )
     (
-        keyed.repartitionByRange(n_files, "__z")
+        keyed.repartitionByRange(_N_FILES, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite")

@@ -17,16 +17,16 @@ from pyspark.sql import functions as F
 from .util import hive_partition_dirname, materialize
 
 
-def dir_bytes(spark: SparkSession, path: str, suffix: str = ".parquet") -> int:
-    """Total bytes of data files directly under ``path``, via the Hadoop
-    FileSystem API (works for any scheme — local, HDFS, s3a)."""
+def dir_bytes(spark: SparkSession, path: str) -> int:
+    """Total bytes of the ``.parquet`` files directly under ``path``, via
+    the Hadoop FileSystem API (works for any scheme — local, HDFS, s3a)."""
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return sum(
         f.getLen()
         for f in fs.listStatus(jpath)
-        if f.isFile() and f.getPath().getName().endswith(suffix)
+        if f.isFile() and f.getPath().getName().endswith(".parquet")
     )
 
 

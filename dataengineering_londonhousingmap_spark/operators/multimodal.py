@@ -194,7 +194,7 @@ def decode_image(payload: bytes, fake: bool = False) -> list[list[int]]:
     return [px[r * w : (r + 1) * w] for r in range(h)]
 
 
-def extract_features(assets: DataFrame, batch_hint: int = 256) -> DataFrame:
+def extract_features(assets: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via
     ``mapInPandas`` — the canonical multimodal operator shape. The feature
     fn itself is trivially replaceable with a real model/codec call; the
@@ -254,23 +254,25 @@ RESIZED = T.StructType(
 )
 
 
-def resize_images(
-    assets: DataFrame,
-    out_w: int = 4,
-    out_h: int = 4,
-    src_w: int = 16,
-    src_h: int = 8,
-) -> DataFrame:
-    """Nearest-neighbour resize over binary payloads via ``mapInPandas`` —
-    the decode → transform → summarize shape of a real thumbnailing stage.
+# 4×4 thumbnails; a non-image payload is read as the 16-wide × 8-high byte
+# matrix that synthesize_media's raw fixtures carry
+_OUT_W = _OUT_H = 4
+_SRC_W, _SRC_H = 16, 8
+
+
+def resize_images(assets: DataFrame) -> DataFrame:
+    """Nearest-neighbour 4×4 resize over binary payloads via
+    ``mapInPandas`` — the decode → transform → summarize shape of a real
+    thumbnailing stage.
 
     Decode step: a payload that IS an image (binary PGM/PPM magic, the
     format :func:`synthesize_media` ``wrap='pgm'`` emits) goes through the
     real dependency-free decoder (:func:`decode_image` — header parse,
     dimensions from the image itself); anything else is interpreted as a
-    raw ``src_h×src_w`` byte matrix (the legacy fixture layout). Either
-    way the kernel is one vectorized numpy index-gather per image inside
-    Arrow batches — no per-pixel Python — with a typed output schema."""
+    raw 8×16 byte matrix (the legacy fixture layout; a NULL payload
+    zero-fills). Either way the kernel is one vectorized numpy
+    index-gather per image inside Arrow batches — no per-pixel Python —
+    with a typed output schema."""
     import numpy as np
 
     def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -282,20 +284,20 @@ def resize_images(
                     m = np.asarray(decode_image(b), dtype=np.uint8)
                     h, w = m.shape
                 else:
-                    if len(b) < src_w * src_h:
-                        b = b.ljust(src_w * src_h, b"\x00")
-                    m = np.frombuffer(b[: src_w * src_h], dtype=np.uint8).reshape(
-                        src_h, src_w
+                    if len(b) < _SRC_W * _SRC_H:
+                        b = b.ljust(_SRC_W * _SRC_H, b"\x00")
+                    m = np.frombuffer(b[: _SRC_W * _SRC_H], dtype=np.uint8).reshape(
+                        _SRC_H, _SRC_W
                     )
-                    h, w = src_h, src_w
-                ri = (np.arange(out_h) * h) // out_h
-                ci = (np.arange(out_w) * w) // out_w
+                    h, w = _SRC_H, _SRC_W
+                ri = (np.arange(_OUT_H) * h) // _OUT_H
+                ci = (np.arange(_OUT_W) * w) // _OUT_W
                 resized = m[np.ix_(ri, ci)]
                 rows.append(
                     {
                         "asset_id": asset_id,
-                        "out_w": out_w,
-                        "out_h": out_h,
+                        "out_w": _OUT_W,
+                        "out_h": _OUT_H,
                         "resized_mean": float(resized.mean()),
                     }
                 )
@@ -326,8 +328,12 @@ PCM_FRAMES = T.StructType(
 )
 
 
-def synthesize_pcm(df: DataFrame, id_col: str, seed_col: str, blocks: int = 8) -> DataFrame:
-    """Deterministic fake PCM audio: payload = ``blocks`` CONCATENATED
+_PCM_BLOCKS = 8
+_FRAME_BYTES = 16  # one md5 digest per frame
+
+
+def synthesize_pcm(df: DataFrame, id_col: str, seed_col: str) -> DataFrame:
+    """Deterministic fake PCM audio: payload = 8 CONCATENATED
     md5 digests of (seed || '|' || block_idx) — unlike
     :func:`synthesize_media`'s repeated single digest, every 16-byte frame
     is distinct, so frame-level operators produce non-degenerate output.
@@ -336,7 +342,7 @@ def synthesize_pcm(df: DataFrame, id_col: str, seed_col: str, blocks: int = 8) -
     payload = F.concat(
         *[
             F.unhex(F.md5(F.concat(F.col(seed_col), F.lit(f"|{k}"))))
-            for k in range(blocks)
+            for k in range(_PCM_BLOCKS)
         ]
     )
     return df.filter(F.col(seed_col).isNotNull()).select(
@@ -347,10 +353,11 @@ def synthesize_pcm(df: DataFrame, id_col: str, seed_col: str, blocks: int = 8) -
     )
 
 
-def frame_energy(assets: DataFrame, frame_bytes: int = 16) -> DataFrame:
-    """Per-frame audio energy/mean over unsigned-8-bit PCM payloads — the
-    audio leg of the multimodal surface (silence trimming, VAD windowing,
-    loudness normalization all start from exactly this frame scan). One
+def frame_energy(assets: DataFrame) -> DataFrame:
+    """Per-16-byte-frame audio energy/mean over unsigned-8-bit PCM
+    payloads — the audio leg of the multimodal surface (silence trimming,
+    VAD windowing, loudness normalization all start from exactly this
+    frame scan). One
     numpy reshape+sum per Arrow batch (``mapInPandas``); integer-exact
     energies, so the query carries an exact hex-math SQL oracle."""
     import numpy as np
@@ -360,10 +367,10 @@ def frame_energy(assets: DataFrame, frame_bytes: int = 16) -> DataFrame:
             out = []
             for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
                 b = np.frombuffer(bytes(payload), dtype=np.uint8)
-                n_frames = len(b) // frame_bytes
-                fr = b[: n_frames * frame_bytes].reshape(n_frames, frame_bytes).astype(np.int64)
+                n_frames = len(b) // _FRAME_BYTES
+                fr = b[: n_frames * _FRAME_BYTES].reshape(n_frames, _FRAME_BYTES).astype(np.int64)
                 energy = (fr * fr).sum(axis=1)
-                mean = fr.sum(axis=1) / float(frame_bytes)
+                mean = fr.sum(axis=1) / float(_FRAME_BYTES)
                 for i in range(n_frames):
                     out.append(
                         {

@@ -47,15 +47,13 @@ def unpivot_yesno(
     value_cols: list[str],
     var_name: str,
     value_name: str,
-    keep: str | None = "Yes",
 ) -> DataFrame:
-    """R3 — melt wide Yes/No columns back to long, optionally keeping only
-    the ``Available == "Yes"`` rows (the filter the reference applies right
+    """R3 — melt wide Yes/No columns back to long, keeping only the
+    ``value_name == "Yes"`` rows (the filter the reference applies right
     after each melt, google_maps_api.ipynb:368-370, 575)."""
-    out = df.unpivot(ids, value_cols, var_name, value_name)
-    if keep is not None:
-        out = out.filter(F.col(value_name) == keep)
-    return out
+    return df.unpivot(ids, value_cols, var_name, value_name).filter(
+        F.col(value_name) == "Yes"
+    )
 
 
 def flatten_londonair_payload(payloads: DataFrame, json_col: str = "payload") -> DataFrame:

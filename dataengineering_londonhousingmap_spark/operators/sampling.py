@@ -23,6 +23,12 @@ from pyspark.sql import functions as F
 # rate=0.1234 is exact
 _BUCKETS = 10_000
 
+# hash salts, one per operator family (the oracles hard-code the same strings)
+_SAMPLE_SALT = "sample"
+_SPLIT_SALT = "split"
+_MIXTURE_SALT = "mixture"
+_KFOLD_SALT = "kfold"
+
 
 def _hash_bucket(id_col: Column, salt: str) -> Column:
     """Deterministic bucket in [0, 10000): int64 of the md5-hex prefix of
@@ -35,13 +41,11 @@ def _hash_bucket(id_col: Column, salt: str) -> Column:
     return h % _BUCKETS
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, rate: float, salt: str = "sample"
-) -> DataFrame:
+def hash_sample(df: DataFrame, id_col: str, rate: float) -> DataFrame:
     """Keep a deterministic ``rate`` fraction of rows by id hash. A pure
     narrow filter — no shuffle, pushes past column pruning, and the SAME
     rows survive at any partitioning or cluster size."""
-    return df.filter(_hash_bucket(F.col(id_col), salt) < int(rate * _BUCKETS))
+    return df.filter(_hash_bucket(F.col(id_col), _SAMPLE_SALT) < int(rate * _BUCKETS))
 
 
 def stratified_hash_sample(
@@ -50,7 +54,6 @@ def stratified_hash_sample(
     strata_col: str,
     rates: dict[str, float],
     default_rate: float = 1.0,
-    salt: str = "sample",
 ) -> DataFrame:
     """Per-stratum deterministic sampling — the class-rebalance operator
     (downsample the over-represented language/source/domain, keep the rest).
@@ -73,12 +76,10 @@ def stratified_hash_sample(
         rate_expr = F.when(
             F.col(strata_col) == value, F.lit(int(rate * _BUCKETS))
         ).otherwise(rate_expr)
-    return df.filter(_hash_bucket(F.col(id_col), salt) < rate_expr)
+    return df.filter(_hash_bucket(F.col(id_col), _SAMPLE_SALT) < rate_expr)
 
 
-def train_test_split(
-    df: DataFrame, id_col: str, test_rate: float = 0.1, salt: str = "split"
-) -> DataFrame:
+def train_test_split(df: DataFrame, id_col: str, test_rate: float = 0.1) -> DataFrame:
     """Reproducible split column ('train' | 'test') by id hash. Disjoint and
     exhaustive by construction; a row keeps its split across re-runs and
     incremental refreshes — the property random splits lose the moment the
@@ -86,7 +87,7 @@ def train_test_split(
     return df.withColumn(
         "split",
         F.when(
-            _hash_bucket(F.col(id_col), salt) < int(test_rate * _BUCKETS), "test"
+            _hash_bucket(F.col(id_col), _SPLIT_SALT) < int(test_rate * _BUCKETS), "test"
         ).otherwise("train"),
     )
 
@@ -96,7 +97,6 @@ def mixture_sample(
     id_col: str,
     source_col: str,
     weights: dict[str, float],
-    salt: str = "mixture",
 ) -> tuple[DataFrame, dict[str, int]]:
     """Target-mixture downsampling: keep the LARGEST corpus whose source
     shares match ``weights`` (the de-facto corpus-mixing step before
@@ -132,7 +132,7 @@ def mixture_sample(
     for s in sorted(buckets):
         thresh = F.when(F.col(source_col) == s, F.lit(buckets[s])).otherwise(thresh)
     return (
-        df.filter(_hash_bucket(F.col(id_col), salt) < thresh),
+        df.filter(_hash_bucket(F.col(id_col), _MIXTURE_SALT) < thresh),
         buckets,
     )
 
@@ -180,11 +180,9 @@ def pack_sequences(
     )
 
 
-def stratified_kfold(
-    df: DataFrame, id_col: str, strata_col: str, k: int, salt: str = "kfold"
-) -> DataFrame:
+def stratified_kfold(df: DataFrame, id_col: str, strata_col: str, k: int) -> DataFrame:
     """Exactly-balanced stratified k-fold assignment: within each stratum,
-    rows are ordered by md5(id || salt) and dealt round-robin into folds —
+    rows are ordered by md5(id || 'kfold') and dealt round-robin into folds —
     every fold gets ⌈n_s/k⌉ or ⌊n_s/k⌋ rows of stratum s (hash-mod
     sampling is only balanced in expectation; CV wants exact balance).
 
@@ -195,7 +193,7 @@ def stratified_kfold(
     rank + offset equals the stratum-global hash rank, so a plain
     row_number-per-stratum is an exact SQL twin.
     """
-    key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(salt)))
+    key = F.md5(F.concat(F.col(id_col).cast("string"), F.lit(_KFOLD_SALT)))
     sharded = df.select(
         F.col(id_col),
         F.col(strata_col),

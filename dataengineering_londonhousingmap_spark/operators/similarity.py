@@ -106,41 +106,6 @@ def _hyperplane(plane: int, dim: int) -> list[float]:
     return [v / norm for v in vals]
 
 
-def _bucket_expr(vec_col: str, planes: list[list[float]]):
-    """Sign-bit sketch of a vector column against fixed hyperplanes, as a
-    single long — pure expressions, evaluated in codegen."""
-    bits = []
-    for j, p in enumerate(planes):
-        arr = F.array(*[F.lit(x) for x in p])
-        dot = F.aggregate(
-            F.zip_with(F.col(vec_col), arr, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(dot >= 0, F.lit(2**j).cast("long")).otherwise(F.lit(0).cast("long")))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def _table_buckets(vec_col: str, num_tables: int, planes_per_table: int, dim: int):
-    """Array of (table_id, bucket) structs — one sketch per hash table,
-    planes seeded independently per table. Pure-expression variant; see
-    :func:`_with_table_buckets` for the vectorized hot path."""
-    entries = []
-    for t in range(num_tables):
-        planes = [
-            _hyperplane(t * 1000 + j, dim) for j in range(planes_per_table)
-        ]
-        entries.append(
-            F.struct(
-                F.lit(t).alias("t"), _bucket_expr(vec_col, planes).alias("b")
-            )
-        )
-    return F.array(*entries)
-
-
 def _with_table_buckets(
     df: DataFrame,
     vec_col: str,
@@ -154,9 +119,7 @@ def _with_table_buckets(
     Spark's higher-order ``aggregate``/``zip_with`` lambdas are interpreted
     per element — num_tables × planes × dim evals per row makes the sketch
     the bottleneck, not the join. The numpy path computes every plane dot for
-    a batch as (n × dim) @ (dim × planes) in one call (~20× faster here);
-    same md5-derived planes, so buckets are identical to the expression
-    variant up to float-sum ordering at exact zero.
+    a batch as (n × dim) @ (dim × planes) in one call (~20× faster here).
     """
     planes = np.array(
         [
@@ -181,30 +144,34 @@ def _with_table_buckets(
     ).drop("__bs")
 
 
+# the sketch family every caller uses: 8 tables of 4 sign bits over the
+# 64-dim embeddings; ann_topk_lsh keeps the top 5
+_NUM_TABLES = 8
+_PLANES_PER_TABLE = 4
+_DIM = 64
+_ANN_K = 5
+
+
 def ann_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    num_tables: int = 8,
-    planes_per_table: int = 4,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id: str = "vec_id",
     query_vec: str = "embedding",
 ) -> DataFrame:
-    """Approximate cosine top-k: explode both sides into per-table buckets,
+    """Approximate cosine top-5: explode both sides into per-table buckets,
     equi-join on (table, bucket), exact rerank over the deduped candidate
     union. Expected recall for per-plane collision prob p:
-    1 - (1 - p^planes_per_table)^num_tables.
+    1 - (1 - p^4)^8.
     """
     c = _with_table_buckets(
         fan_out(corpus).select(F.col(id_col), F.col(vec_col)),
-        vec_col, num_tables, planes_per_table, dim,
+        vec_col, _NUM_TABLES, _PLANES_PER_TABLE, _DIM,
     )
     q = _with_table_buckets(
         queries.select(F.col(query_id).alias("query_id"), F.col(query_vec).alias("__qvec")),
-        "__qvec", num_tables, planes_per_table, dim,
+        "__qvec", _NUM_TABLES, _PLANES_PER_TABLE, _DIM,
     )
     joined = c.join(q, ["__t", "__b"]).filter(F.col(id_col) != F.col("query_id"))  # null-audited: embedding ids are non-null (pinned vintage invariant); a NULL id could never be a query anchor
     scored = (
@@ -219,7 +186,7 @@ def ann_topk_lsh(
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("match_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _ANN_K)
         .withColumn("rank", F.col("rank").cast("long"))
     )
 
@@ -265,9 +232,9 @@ def embedding_near_dup(
 
 def lsh_near_dup_candidates(
     corpus: DataFrame,
-    num_tables: int = 8,
-    planes_per_table: int = 4,
-    dim: int = 64,
+    num_tables: int = _NUM_TABLES,
+    planes_per_table: int = _PLANES_PER_TABLE,
+    dim: int = _DIM,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -298,7 +265,6 @@ def train_ivf_centroids(
     corpus: DataFrame,
     k: int = 16,
     iters: int = 3,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> list[list[float]]:
@@ -355,7 +321,7 @@ def train_ivf_centroids(
         new = [list(c) for c in centroids]  # empty clusters keep old centroid
         by_cid: dict[int, list[float]] = {}
         for r in means:
-            by_cid.setdefault(r["__cid"], [0.0] * dim)[r["__d"]] = r["__mu"]
+            by_cid.setdefault(r["__cid"], [0.0] * _DIM)[r["__d"]] = r["__mu"]
         for cid, vec in by_cid.items():
             new[cid] = vec
         centroids = new

@@ -142,22 +142,20 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def guard_global_sort(
-    df: DataFrame, operator: str, limit_bytes: int = 1 << 30, allow_large: bool = False
-) -> None:
+_GLOBAL_SORT_LIMIT_BYTES = 1 << 30
+
+
+def guard_global_sort(df: DataFrame, operator: str) -> None:
     """Refuse to run a global (unpartitioned) ``Window.orderBy`` over an
-    estimated-large input instead of silently serializing it through one
-    task. Positional operators (zip_join, whole-stream sessionization)
+    input estimated above 1 GiB instead of silently serializing it through
+    one task. Positional operators (zip_join, whole-stream sessionization)
     inherit the reference's row-order semantics and genuinely need a total
     order — correct on the dimension-sized inputs they were built for,
     pathological if someone points them at a fact table.
 
     Uses Catalyst's optimized-plan size ESTIMATE (driver-side, no job); an
-    unavailable estimate passes (never block on a guard). ``allow_large``
-    is the explicit eyes-open override.
+    unavailable estimate passes (never block on a guard).
     """
-    if allow_large:
-        return
     try:
         raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         est = int(raw if isinstance(raw, int) else str(raw))
@@ -168,11 +166,10 @@ def guard_global_sort(
         # (spark.sql.defaultSizeInBytes default), not a real estimate —
         # never block on it
         return
-    if est > limit_bytes:
+    if est > _GLOBAL_SORT_LIMIT_BYTES:
         raise ValueError(
             f"{operator}: input estimated at {est} bytes would be sorted in a "
-            f"SINGLE task (global Window.orderBy). Use the partitioned variant, "
-            f"or pass allow_large=True if the estimate is known to be wrong."
+            f"SINGLE task (global Window.orderBy). Use the partitioned variant."
         )
 
 

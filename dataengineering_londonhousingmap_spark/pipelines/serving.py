@@ -14,14 +14,16 @@ from pyspark.sql import functions as F
 
 from ..operators.util import exact_avg_cents
 
+_RADIUS_KM = 1.0  # the webapp's "within 1 km of a station" (README.md:4)
 
-def station_price_summary(listings: DataFrame, radius_km: float = 1.0) -> DataFrame:
+
+def station_price_summary(listings: DataFrame) -> DataFrame:
     """THE serving metric (A3): avg price + listing count per station,
-    radius-filtered. Filter precedes the aggregate so the shuffle carries
-    only in-radius rows; at 100 TB the distance predicate also prunes
-    partitions if listings are bucketed by station."""
+    filtered to listings within 1 km. Filter precedes the aggregate so the
+    shuffle carries only in-radius rows; at 100 TB the distance predicate
+    also prunes partitions if listings are bucketed by station."""
     return (
-        listings.filter(F.col("distance_km") < radius_km)
+        listings.filter(F.col("distance_km") < _RADIUS_KM)
         .filter(F.col("price").isNotNull() & F.col("subway_station").isNotNull())
         .groupBy("subway_station")
         .agg(
@@ -33,19 +35,10 @@ def station_price_summary(listings: DataFrame, radius_km: float = 1.0) -> DataFr
     )
 
 
-def station_air_summary(
-    air: DataFrame,
-    tube_site_mapping: DataFrame,
-    start: str | None = None,
-    end: str | None = None,
-) -> DataFrame:
-    """Air-pollution info per station over an optional time window: fact
-    time series ⋈ broadcast station↔site mapping → per station/species
-    mean (A4 + J6). The date predicate pushes into the partitioned scan."""
-    if start is not None:
-        air = air.filter(F.col("measurement_date_gmt") >= start)
-    if end is not None:
-        air = air.filter(F.col("measurement_date_gmt") < end)
+def station_air_summary(air: DataFrame, tube_site_mapping: DataFrame) -> DataFrame:
+    """Air-pollution info per station over the whole series: fact time
+    series ⋈ broadcast station↔site mapping → per station/species mean
+    (A4 + J6)."""
     return (
         air.join(F.broadcast(tube_site_mapping), "site_code")
         .groupBy("subway_station", "species_code")
@@ -62,11 +55,10 @@ def station_dashboard(
     air: DataFrame,
     tube_site_mapping: DataFrame,
     location_information: DataFrame,
-    radius_km: float = 1.0,
 ) -> DataFrame:
     """The full webapp payload: price summary ⋈ pollution summary ⋈ station
     master data — one row per station × species."""
-    prices = station_price_summary(listings, radius_km)
+    prices = station_price_summary(listings)
     pollution = station_air_summary(air, tube_site_mapping)
     dim = F.broadcast(
         location_information.select("subway_station", "tube_line", "transport_zone")

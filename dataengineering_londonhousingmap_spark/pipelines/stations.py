@@ -30,18 +30,17 @@ def explode_zone_membership(stations_wide: DataFrame, zone_cols: list[str]) -> D
         value_cols=zone_cols,
         var_name="Transport Zone",
         value_name="Available",
-        keep="Yes",
     )
     return out.drop("Available").orderBy("Station", "Transport Zone")
 
 
-def sessionize_scraped_lines(tokens: DataFrame, marker: str = "Travelcard") -> DataFrame:
+def sessionize_scraped_lines(tokens: DataFrame) -> DataFrame:
     """GM cells 10-12 (list_divider): the scraped Wikipedia token stream is
-    split into per-station records at the sentinel marker."""
+    split into per-station records at the sentinel "Travelcard" token."""
     return sessionize_by_marker(
         tokens,
         order_col="pos",
-        marker_col=F.col("token") == marker,
+        marker_col=F.col("token") == "Travelcard",
         session_name="station_idx",
     )
 

@@ -400,7 +400,7 @@ def q_pipeline_listings(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("transport_raw"),
     )
     cleaned = clean_zoopla(raw, order_col="link")
-    return station_price_summary(cleaned, radius_km=1.0)
+    return station_price_summary(cleaned)
 
 
 def q_pipeline_dexters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -572,7 +572,7 @@ def q_serving_dashboard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     listings = clean_zoopla(_synth_listings_raw(spark, sf_dir), order_col="link")
     air, mapping, dim = _synth_air_frames(spark, sf_dir)
-    out = station_dashboard(listings, air, mapping, dim, radius_km=1.0)
+    out = station_dashboard(listings, air, mapping, dim)
     return out.select(
         "subway_station", "avg_price", "n_listings", "species_code",
         "avg_value", "max_value", "n_measurements", "tube_line", "transport_zone",
@@ -604,9 +604,7 @@ def q_pipeline_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         Task(
             "serve_dashboard",
-            lambda ctx: station_dashboard(
-                ctx["clean_listings"], *ctx["ingest_air"], radius_km=1.0
-            ),
+            lambda ctx: station_dashboard(ctx["clean_listings"], *ctx["ingest_air"]),
             deps=["clean_listings", "ingest_air"],
         ),
     ]
@@ -1617,8 +1615,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mapping = mapping.materialize()
     sh = char_shingles(reps, "doc_id", "text", w=8, distinct=False)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4).select(
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id").select(
         F.col("id_a").alias("rep_a"), F.col("id_b").alias("rep_b")
     )
     return quotient_expand_pairs(cand, mapping, "doc_id", include_self_pairs=True)
@@ -1661,8 +1659,8 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist(), checkpoint blocks are released by the ContextCleaner as
     # soon as the returned plan is garbage-collected.
     sh = char_shingles(reps, "doc_id", "text", w=8).transform(materialize)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     out = ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand)
     rp = out.select(
         F.col("id_a").alias("rep_a"), F.col("id_b").alias("rep_b"), "jaccard"
@@ -1874,7 +1872,7 @@ def q_embed_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall baseline)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    out = ann_topk_lsh(emb, queries, k=5, num_tables=8, planes_per_table=4, dim=64)
+    out = ann_topk_lsh(emb, queries)
     return out.select("query_id", "match_id", F.round("cosine", 6).alias("cosine"), "rank")
 
 
@@ -2111,7 +2109,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL."""
     docs = _t(spark, sf_dir, "documents")
     assets = synthesize_media(docs, "doc_id", "text", wrap="pgm")
-    resized = resize_images(assets, out_w=4, out_h=4)
+    resized = resize_images(assets)
     return resized.select(
         "asset_id", "out_w", "out_h", F.round("resized_mean", 6).alias("resized_mean")
     )
@@ -2178,9 +2176,9 @@ def q_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = read_events_stream(spark, sf_dir).select("user_id", "ts", "value")
     sessions = run_stream_to_memory(
-        sessionize_stream(events, gap_minutes=30), "q_stream_sessions_sink", "complete"
+        sessionize_stream(events), "q_stream_sessions_sink", "complete"
     )
-    return closed_sessions(sessions, gap_minutes=30).select(
+    return closed_sessions(sessions).select(
         "user_id", "session_start", "session_end", "n_events",
         F.round("total_value", 6).alias("total_value"),
     )
@@ -2285,9 +2283,6 @@ def q_stream_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         key_col="user_id",
         partition_col="event_type",
         order_col="event_id",
-        # a user's latest row can land in a different event_type partition
-        # than their stored row — probe and retire moved-key stale rows
-        keys_move_partitions=True,
     )
     q.awaitTermination()
     return spark.read.parquet(os.path.join(base, "table")).select(
@@ -2341,8 +2336,8 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").isNotNull(),
     )
     sh = char_shingles(reps, "doc_id", "text", w=8).transform(materialize)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     edges = ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand).select(
         "id_a", "id_b"
     )
@@ -4465,8 +4460,8 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mapping = mapping.materialize()
     sh = char_shingles(reps, "doc_id", "text", w=8).transform(materialize)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     rp = ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand).select(
         F.col("id_a").alias("rep_a"), F.col("id_b").alias("rep_b"), "jaccard"
     )
@@ -4575,8 +4570,8 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mapping = mapping.materialize()
     sh = char_shingles(reps, "doc_id", "text", w=8).transform(materialize)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     rp = ngram_containment_pairs(
         sh, "doc_id", threshold=0.3, candidates=cand
     ).select(
@@ -4608,7 +4603,6 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ev,
         stage_dir=os.path.join(STAGE_DIR, f"stream_late_{tag}"),
-        watermark="1 hour",
         sink_name=f"late_rollup_sink_{tag}",
     )
 
@@ -4765,11 +4759,8 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).transform(materialize)
     # the signature table splits into new/index sides — materialize it
     # (16 longs per rep) so the minhash groupBy runs once, not per side
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16).transform(materialize)
-    cand = lsh_candidate_pairs_against(
-        sig.filter(is_new), sig.filter(~is_new),
-        "doc_id", num_hashes=16, bands=4,
-    )
+    sig = minhash_signatures(sh, "doc_id").transform(materialize)
+    cand = lsh_candidate_pairs_against(sig.filter(is_new), sig.filter(~is_new), "doc_id")
     pairs = ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand)
     # per-side expansion through each side's arm (dense stays merge-pinned:
     # a corpus-proportional mapping behind a checkpoint whose stats
@@ -4823,8 +4814,8 @@ def q_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=None).select(
         "id_a", "id_b"
     )
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     t = truth.withColumn("__t", F.lit(1))
     c = cand.withColumn("__c", F.lit(1))
     j = t.join(c, ["id_a", "id_b"], "full_outer")
@@ -5310,8 +5301,8 @@ def q_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.multimodal import frame_energy, synthesize_pcm
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
-    pcm = synthesize_pcm(docs, "doc_id", "text", blocks=8)
-    out = frame_energy(pcm, frame_bytes=16)
+    pcm = synthesize_pcm(docs, "doc_id", "text")
+    out = frame_energy(pcm)
     return out.select(
         "asset_id", "frame_idx", "energy", F.round("mean_amp", 6).alias("mean_amp")
     )
@@ -5344,14 +5335,12 @@ def q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mapping = mapping.materialize()
     sh = char_shingles(reps, "doc_id", "text", w=8).transform(materialize)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
+    sig = minhash_signatures(sh, "doc_id")
     # the SHARED candidate set is cut once here (through the materialize()
     # chokepoint, so the reliable-checkpoint cluster flag applies) and the
     # verifies are told so — they skip their internal cut instead of
     # re-copying the blocks
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4).transform(
-        materialize
-    )
+    cand = lsh_candidate_pairs(sig, "doc_id").transform(materialize)
     from .operators.dedup import ngram_containment_pairs
 
     jac = ngram_jaccard_pairs(
@@ -5762,7 +5751,6 @@ def q_stream_dedup_late(spark: SparkSession, sf_dir: str) -> DataFrame:
         b,
         stage_dir=os.path.join(STAGE_DIR, f"stream_dedup_late_{tag}"),
         key_col="user_id",
-        watermark="1 hour",
         sink_name=f"dedup_replay_sink_{tag}",
     )
     return out.select("user_id", "ts", "event_id")

@@ -183,11 +183,15 @@ def _two_batch_stream(
     )
 
 
+# the two-batch replays (late_data_rollup, dedup_two_batch_replay) hold
+# their watermark 1 hour behind batch 1's max event time
+_REPLAY_WATERMARK = "1 hour"
+
+
 def late_data_rollup(
     spark: SparkSession,
     events_batch: DataFrame,
     stage_dir: str,
-    watermark: str = "1 hour",
     sink_name: str = "late_rollup_sink",
 ) -> DataFrame:
     """Watermark LATE-DATA DROP semantics made deterministic: the events
@@ -217,7 +221,7 @@ def late_data_rollup(
         "event_id long, ts timestamp, event_type string, value double",
     )
     agg = (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", _REPLAY_WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("__n"), F.sum("value").alias("__sum"))
     )
@@ -242,7 +246,6 @@ def dedup_two_batch_replay(
     batch_b: DataFrame,
     stage_dir: str,
     key_col: str,
-    watermark: str = "1 hour",
     sink_name: str = "dedup_replay_sink",
 ) -> DataFrame:
     """``dropDuplicatesWithinWatermark`` across TWO micro-batches — the
@@ -264,7 +267,7 @@ def dedup_two_batch_replay(
     batch_a = batch_a.withColumn("ts", F.col("ts").cast("timestamp"))
     batch_b = batch_b.withColumn("ts", F.col("ts").cast("timestamp"))
     stream, arrive_b = _two_batch_stream(spark, batch_a, batch_b, stage_dir, batch_a.schema)
-    dd = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark([key_col])
+    dd = stream.withWatermark("ts", _REPLAY_WATERMARK).dropDuplicatesWithinWatermark([key_col])
     # batch 1 seeds state and the watermark; batch 2 meets late drop,
     # dedup and re-admission
     return run_stream_to_memory(dd, sink_name, "append", arrive=arrive_b)
@@ -277,15 +280,17 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
 
 
-def sessionize_stream(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-user inactivity-gap sessionization on Catalyst's streaming
-    MergingSessions exec (``F.session_window`` under a watermark): the
-    streaming upgrade of the batch marker-sessionization R5, with no Python
-    worker on the ingest path.
+# one gap and watermark shared by sessionize_stream and closed_sessions, so
+# the batch filter always states the stream's own emission rule
+_SESSION_GAP_MINUTES = 30
+_SESSION_WATERMARK = "2 hours"
+
+
+def sessionize_stream(events: DataFrame) -> DataFrame:
+    """Per-user 30-minute inactivity-gap sessionization on Catalyst's
+    streaming MergingSessions exec (``F.session_window`` under a 2-hour
+    watermark): the streaming upgrade of the batch marker-sessionization
+    R5, with no Python worker on the ingest path.
 
     One row per session: first and last event time, event count and the
     NULL-as-zero value total. In append mode a session is emitted once the
@@ -298,8 +303,8 @@ def sessionize_stream(
     it in the Python stateful addBatch (STREAM_PROFILE_r11.json).
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes"))
+        events.withWatermark("ts", _SESSION_WATERMARK)
+        .groupBy("user_id", F.session_window("ts", f"{_SESSION_GAP_MINUTES} minutes"))
         .agg(
             F.min("ts").alias("session_start"),
             F.max("ts").alias("session_end"),
@@ -310,16 +315,12 @@ def sessionize_stream(
     )
 
 
-def closed_sessions(
-    sessions: DataFrame,
-    gap_minutes: int = 30,
-    watermark: str = "2 hours",
-) -> DataFrame:
+def closed_sessions(sessions: DataFrame) -> DataFrame:
     """The CLOSED sessions of a finished ``sessionize_stream`` run (a batch
     filter over its complete-mode sink table). A session is closed when
     its user has a later session (a successor event closed it), or when
     the final watermark has passed ``session_end + gap``. The final
-    watermark is Spark's own: max event time − ``watermark``. So only each
+    watermark is Spark's own: max event time − 2 hours. So only each
     user's trailing session younger than that horizon stays open. A NULL
     ``user_id`` is no known user, so as under SQL equality no session is
     its successor and only the watermark closes NULL-user sessions.
@@ -330,16 +331,20 @@ def closed_sessions(
     from pyspark.sql import Window
 
     final_wm = sessions.select(
-        F.max("session_end") - F.expr(f"INTERVAL {watermark}")
+        F.max("session_end") - F.expr(f"INTERVAL {_SESSION_WATERMARK}")
     ).scalar()
     return (
         sessions.withColumn("__last", F.max("session_start").over(Window.partitionBy("user_id")))
         .filter(
             (F.col("user_id").isNotNull() & (F.col("session_start") < F.col("__last")))
-            | (F.col("session_end") + F.expr(f"INTERVAL {gap_minutes} MINUTES") < final_wm)
+            | (F.col("session_end") + F.expr(f"INTERVAL {_SESSION_GAP_MINUTES} MINUTES") < final_wm)
         )
         .drop("__last")
     )
+
+
+_JOIN_INTERVAL = "1 hour"
+_JOIN_WATERMARK = "2 hours"
 
 
 def interval_join_stream(
@@ -348,13 +353,11 @@ def interval_join_stream(
     key: str,
     left_ts: str = "ts",
     right_ts: str = "ts",
-    interval: str = "1 hour",
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Watermarked stream-stream inner join: match right rows to left rows
     with the same ``key`` whose event time falls within ``[left_ts,
-    left_ts + interval]``. Both sides carry watermarks so the join state is
-    PURGEABLE — without the time bound the state grows forever (the classic
+    left_ts + 1 hour]``. Both sides carry 2-hour watermarks so the join
+    state is PURGEABLE — without the time bound the state grows forever (the classic
     stream-join failure at scale). Spark plans this as a symmetric hash
     join over watermark-bounded state.
 
@@ -362,14 +365,14 @@ def interval_join_stream(
     columns directly); every right column comes back ``r_``-prefixed in the
     output so the two sides never collide.
     """
-    l = left.withWatermark(left_ts, watermark)
+    l = left.withWatermark(left_ts, _JOIN_WATERMARK)
     r = right.select([F.col(c).alias(f"r_{c}") for c in right.columns]).withWatermark(
-        f"r_{right_ts}", watermark
+        f"r_{right_ts}", _JOIN_WATERMARK
     )
     cond = (
         (l[key] == r[f"r_{key}"])
         & (r[f"r_{right_ts}"] >= l[left_ts])
-        & (r[f"r_{right_ts}"] <= l[left_ts] + F.expr(f"INTERVAL {interval}"))
+        & (r[f"r_{right_ts}"] <= l[left_ts] + F.expr(f"INTERVAL {_JOIN_INTERVAL}"))
     )
     return l.join(r, cond, "inner")
 
@@ -430,7 +433,6 @@ def start_upsert_sink(
     key_col: str,
     partition_col: str,
     order_col: str | None = None,
-    keys_move_partitions: bool = False,
 ):
     """Streaming CDC apply: upsert each micro-batch into a Hive-partitioned
     Parquet table via ``foreachBatch`` — the change-data-capture landing
@@ -448,14 +450,12 @@ def start_upsert_sink(
     within one batch are broken arbitrarily, so suppliers of
     multi-row-per-key batches should always pass it.
 
-    Affected partitions = the batch's own partitions, plus — when
-    ``keys_move_partitions`` — any partition currently holding one of the
-    batch's keys (a broadcast semi-join probe of the table), so a key whose
-    new latest row lands in a DIFFERENT partition gets its stale row
-    retired instead of surviving as a duplicate. Leave it False only when
-    the partition column is immutable per key (then the probe is pure
-    cost); a partition left empty by a move is rewritten with its remaining
-    rows. Returns the started query; callers ``awaitTermination()``.
+    Affected partitions = the batch's own partitions, plus any partition
+    currently holding one of the batch's keys (a broadcast semi-join probe
+    of the table), so a key whose new latest row lands in a DIFFERENT
+    partition gets its stale row retired instead of surviving as a
+    duplicate; a partition left empty by a move is dropped. Returns the
+    started query; callers ``awaitTermination()``.
     """
     from pyspark.sql import Window
 
@@ -469,18 +469,17 @@ def start_upsert_sink(
         new = batch.withColumn("__pri", F.lit(0))
         try:
             table = spark.read.parquet(table_dir)
-            if keys_move_partitions:
-                moved = (
-                    table.join(
-                        F.broadcast(batch.select(key_col).distinct()),
-                        key_col,
-                        "leftsemi",
-                    )
-                    .select(partition_col)
-                    .distinct()
-                    .collect()
+            moved = (
+                table.join(
+                    F.broadcast(batch.select(key_col).distinct()),
+                    key_col,
+                    "leftsemi",
                 )
-                affected |= {r[0] for r in moved}
+                .select(partition_col)
+                .distinct()
+                .collect()
+            )
+            affected |= {r[0] for r in moved}
             # a NULL partition value (Hive's __HIVE_DEFAULT_PARTITION__)
             # needs an explicit isNull arm: isin() never matches NULL, so
             # the existing NULL-partition rows would be skipped here and
@@ -593,14 +592,17 @@ def run_stream_to_memory(
     return spark.table(name)
 
 
-def sliding_rollup_stream(events: DataFrame, watermark: str = "4 hours") -> DataFrame:
+_SLIDING_WATERMARK = "4 hours"
+
+
+def sliding_rollup_stream(events: DataFrame) -> DataFrame:
     """Sliding-window rollup (2-hour windows every hour): each event lands
     in exactly two overlapping windows — the moving-average shape tumbling
-    windows can't express. State is bounded by watermark just like the
-    tumbling rollup; the batch twin assigns each row its two epoch-aligned
+    windows can't express. State is bounded by a 4-hour watermark just
+    like the tumbling rollup; the batch twin assigns each row its two epoch-aligned
     window starts explicitly (window length / slide = 2 copies)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", _SLIDING_WATERMARK)
         .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(exact_avg_cents("value").alias("avg_value"), F.count("*").alias("n"))
         .select(

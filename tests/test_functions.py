@@ -63,6 +63,39 @@ def test_split_miles(spark):
     assert rows[1].d is None and rows[1].st is None
 
 
+def test_split_miles_matches_split_definition(spark):
+    """split_miles finds its parts by literal search. It must give exactly
+    the first two elements of split(s, ' miles ') whenever that split has
+    two or more, and NULL otherwise."""
+    dist, station = split_miles("s")
+    df = spark.createDataFrame(
+        [
+            (None,),
+            ("nearby Angel",),
+            ("0.3 miles Angel",),
+            ("0.5 miles Bank miles Oval",),  # two delimiters
+            (" miles Angel",),  # empty first part
+            ("0.2 miles ",),  # empty second part
+            (" miles  miles ",),  # all parts empty
+            ("0.1 miles miles Oval",),  # occurrences share a space
+            ("1e0 miles x.y*z",),  # regex metacharacters are literal text
+        ],
+        "s string",
+    )
+    parts = F.split("s", " miles ")
+    want = F.when(F.size(parts) >= 2, F.struct(
+        F.element_at(parts, 1).try_cast("double").alias("d"),
+        F.element_at(parts, 2).alias("st"),
+    ))
+    rows = df.select(
+        "s", dist.alias("d"), station.alias("st"), want.alias("want")
+    ).collect()
+    for r in rows:
+        expect = (r.want.d, r.want.st) if r.want is not None else (None, None)
+        assert (r.d, r.st) == expect, r.s
+    assert rows[3].st == "Bank" and rows[4].st == "Angel" and rows[5].st == ""
+
+
 def test_station_string_cleanups(spark):
     assert _vals(
         spark,

@@ -148,7 +148,7 @@ def test_zorder_layout_prunes_files(spark, tmp_path):
     flat, zed = str(tmp_path / "flat"), str(tmp_path / "zed")
     # baseline: hash-scattered layout, same file count
     grid.repartition(16).write.mode("overwrite").parquet(flat)
-    zorder_write(grid, zed, "a", "b", n_files=16)
+    zorder_write(grid, zed, "a", "b")
 
     def files_with_matches(path):
         n = 0

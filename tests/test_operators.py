@@ -191,8 +191,8 @@ def test_lsh_finds_near_duplicates(spark):
         "doc_id long, text string",
     )
     sh = char_shingles(docs, "doc_id", "text", w=8)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     pairs = {(r.id_a, r.id_b) for r in cand.collect()}
     assert (1, 2) in pairs  # one-char suffix diff shares almost all shingles
 
@@ -247,7 +247,7 @@ def test_ann_lsh_recall_vs_bruteforce(spark, sf_dir):
     emb = read_testdata(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = ann_topk_bruteforce(emb, queries, k=5)
-    approx = ann_topk_lsh(emb, queries, k=5, num_tables=8, planes_per_table=4, dim=64)
+    approx = ann_topk_lsh(emb, queries)
     e = {(r.query_id, r.match_id) for r in exact.collect()}
     a = {(r.query_id, r.match_id) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -544,23 +544,18 @@ def test_cluster_conf_is_consistent():
 
 def test_review_fixes_regressions(spark):
     """Regression pack for the code-review findings."""
-    import pytest
-
-    from dataengineering_londonhousingmap_spark.functions.text import bpe_ish_token_count, token_count
+    from dataengineering_londonhousingmap_spark.functions.text import token_count
     from dataengineering_londonhousingmap_spark.operators.dedup import (
         char_shingles as _cs,
         lsh_candidate_pairs as _lsh,
         minhash_signatures as _mh,
     )
-    from dataengineering_londonhousingmap_spark.operators.joins import salted_join
     from dataengineering_londonhousingmap_spark.operators.reshape import onehot_pivot
 
     # NULL text → NULL token counts (not legacy size(NULL) = -1)
     df = spark.createDataFrame([(1, None), (2, "a b")], "id long, text string")
-    rows = {r.id: (r.n, r.b) for r in df.select(
-        "id", token_count("text").alias("n"), bpe_ish_token_count("text").alias("b")
-    ).collect()}
-    assert rows[1] == (None, None) and rows[2] == (2, 2)
+    rows = {r.id: r.n for r in df.select("id", token_count("text").alias("n")).collect()}
+    assert rows[1] is None and rows[2] == 2
 
     # onehot: NULL list rows get 'No' dummies, not NULL
     oh = onehot_pivot(
@@ -570,22 +565,12 @@ def test_review_fixes_regressions(spark):
     r2 = {r.k: (r.a, r.b) for r in oh.collect()}
     assert r2[2] == ("No", "No")
 
-    # salted_join refuses right/full outer (x-salt inflation)
-    l = spark.createDataFrame([(1, "a")], "k long, v string")
-    r = spark.createDataFrame([(1, "x"), (2, "y")], "k long, w string")
-    with pytest.raises(ValueError):
-        salted_join(l, r, key="k", salt=4, how="full")
-
     # NULL-text docs produce no shingles → no all-NULL-signature candidates
     docs = spark.createDataFrame([(1, None), (2, None), (3, "abcdefghij")], "doc_id long, text string")
     sh = _cs(docs, "doc_id", "text", w=8)
     assert sh.filter(F.col("doc_id").isin(1, 2)).count() == 0
-    cand = _lsh(_mh(sh, "doc_id", 16), "doc_id", 16, 4)
+    cand = _lsh(_mh(sh, "doc_id"), "doc_id")
     assert cand.count() == 0
-
-    # bands must divide num_hashes
-    with pytest.raises(ValueError):
-        _lsh(_mh(sh, "doc_id", 16), "doc_id", num_hashes=16, bands=5)
 
 
 def test_grouped_zscore_agrees_with_native_window(spark, sf_dir):
@@ -991,7 +976,7 @@ def test_pgm_ppm_codec_known_fixtures():
 
 def test_resize_images_decodes_real_pgm(spark):
     """resize_images must take the REAL decode path for PGM payloads —
-    dimensions from the image header, not the src_w/src_h defaults — and
+    dimensions from the image header, not the raw 16×8 layout — and
     produce the exact same thumbnail as the raw-matrix path when the
     pixels match (the property q_multimodal_resize's oracle relies on)."""
     from dataengineering_londonhousingmap_spark.operators.multimodal import (
@@ -1008,7 +993,7 @@ def test_resize_images_decodes_real_pgm(spark):
     assets = spark.createDataFrame(
         [(1, pgm), (2, small)], "asset_id long, payload binary"
     )
-    got = {r.asset_id: r for r in resize_images(assets, out_w=4, out_h=4).collect()}
+    got = {r.asset_id: r for r in resize_images(assets).collect()}
     assert got[1].resized_mean == 54.0  # identical to the raw-path fixture
     # 4×4 thumbnail of the 4×2 image: rows {0,0,1,1}, cols {0,1,2,3}
     assert got[2].resized_mean == (0 + 10 + 20 + 30 + 40 + 50 + 60 + 70) / 8 * 1.0

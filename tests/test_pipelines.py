@@ -169,7 +169,7 @@ def test_nn_mapping_and_dashboard(spark):
          ("4", "dexters", 300000.0, "Oval", 0.2)],
         "ad_id string, source string, price double, subway_station string, distance_km double",
     )
-    prices = station_price_summary(listings, radius_km=1.0)
+    prices = station_price_summary(listings)
     p = {r.subway_station: (r.avg_price, r.n_listings) for r in prices.collect()}
     assert p["Angel"] == (600000.0, 2)  # 2.0 km listing excluded
     assert p["Oval"] == (300000.0, 1)

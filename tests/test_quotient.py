@@ -39,8 +39,8 @@ from dataengineering_londonhousingmap_spark.operators.similarity import embeddin
 
 def _text_edges(docs):
     sh = char_shingles(docs, "doc_id", "text", w=8)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     return ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand).select(
         "id_a", "id_b"
     )
@@ -233,8 +233,8 @@ def _pair_corpus(spark):
 
 def _minhash_direct(docs):
     sh = char_shingles(docs, "doc_id", "text", w=8, distinct=False)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    return lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    return lsh_candidate_pairs(sig, "doc_id")
 
 
 def _minhash_quotient(docs):
@@ -264,8 +264,8 @@ def test_minhash_candidate_quotient_matches_direct(spark):
 
 def _jaccard_direct(docs):
     sh = char_shingles(docs, "doc_id", "text", w=8)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     out = ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand)
     return out.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
@@ -278,8 +278,8 @@ def _jaccard_quotient(docs):
     )
     mapping = mapping.materialize()
     sh = char_shingles(reps, "doc_id", "text", w=8).transform(materialize)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     rp = ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand).select(
         F.col("id_a").alias("rep_a"), F.col("id_b").alias("rep_b"), "jaccard"
     )
@@ -311,11 +311,8 @@ def test_incremental_quotient_matches_direct(spark):
 
     def direct():
         sh = char_shingles(docs, "doc_id", "text", w=8).transform(materialize)
-        sig = minhash_signatures(sh, "doc_id", num_hashes=16).transform(materialize)
-        cand = lsh_candidate_pairs_against(
-            sig.filter(side_new), sig.filter(~side_new), "doc_id",
-            num_hashes=16, bands=4,
-        )
+        sig = minhash_signatures(sh, "doc_id").transform(materialize)
+        cand = lsh_candidate_pairs_against(sig.filter(side_new), sig.filter(~side_new), "doc_id")
         return ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand).select(
             F.col("id_a").alias("new_id"), F.col("id_b").alias("index_id"),
             F.round("jaccard", 6).alias("jaccard"),
@@ -331,11 +328,8 @@ def test_incremental_quotient_matches_direct(spark):
         sh = char_shingles(
             n_reps.unionByName(i_reps), "doc_id", "text", w=8
         ).transform(materialize)
-        sig = minhash_signatures(sh, "doc_id", num_hashes=16).transform(materialize)
-        cand = lsh_candidate_pairs_against(
-            sig.filter(side_new), sig.filter(~side_new), "doc_id",
-            num_hashes=16, bands=4,
-        )
+        sig = minhash_signatures(sh, "doc_id").transform(materialize)
+        cand = lsh_candidate_pairs_against(sig.filter(side_new), sig.filter(~side_new), "doc_id")
         pairs = ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand)
         out = n_map.expand(pairs, "id_a", "new_id")
         out = i_map.expand(out, "id_b", "index_id")
@@ -512,8 +506,8 @@ def _containment_direct(docs):
     from dataengineering_londonhousingmap_spark.operators.util import materialize
 
     sh = char_shingles(docs, "doc_id", "text", w=8).transform(materialize)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id")
     return ngram_containment_pairs(sh, "doc_id", threshold=0.3, candidates=cand)
 
 
@@ -679,10 +673,8 @@ def _agreement_frame(docs, quotient: bool):
     else:
         reps, mapping = docs, None
     sh = char_shingles(reps, "doc_id", "text", w=8).transform(materialize)
-    sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-    cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4).transform(
-        materialize
-    )
+    sig = minhash_signatures(sh, "doc_id")
+    cand = lsh_candidate_pairs(sig, "doc_id").transform(materialize)
     jac = ngram_jaccard_pairs(
         sh, "doc_id", threshold=0.2, candidates=cand, candidates_materialized=True
     ).select(
@@ -759,8 +751,8 @@ def _leakage_frame(docs, quotient: bool):
         )
         mapping = mapping.materialize()
         sh = char_shingles(reps, "doc_id", "text", w=8).transform(materialize)
-        sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-        cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+        sig = minhash_signatures(sh, "doc_id")
+        cand = lsh_candidate_pairs(sig, "doc_id")
         rp = ngram_jaccard_pairs(
             sh, "doc_id", threshold=0.2, candidates=cand
         ).select(
@@ -772,8 +764,8 @@ def _leakage_frame(docs, quotient: bool):
         )
     else:
         sh = char_shingles(docs, "doc_id", "text", w=8).transform(materialize)
-        sig = minhash_signatures(sh, "doc_id", num_hashes=16)
-        cand = lsh_candidate_pairs(sig, "doc_id", num_hashes=16, bands=4)
+        sig = minhash_signatures(sh, "doc_id")
+        cand = lsh_candidate_pairs(sig, "doc_id")
         pairs = ngram_jaccard_pairs(sh, "doc_id", threshold=0.2, candidates=cand)
     split = train_test_split(docs.select("doc_id"), "doc_id", test_rate=0.4).select(
         "doc_id", "split"

@@ -158,12 +158,11 @@ def test_hash_sample_is_narrow_no_shuffle(spark, sf_dir):
 def test_global_sort_guard_refuses_large_inputs(spark):
     """zip_join / sessionize_by_marker single-partition-sort by semantics —
     they must refuse estimated-large inputs instead of silently
-    serializing, with allow_large as the explicit override."""
+    serializing."""
     import pyspark.sql.functions as Fn
     import pytest
 
     from dataengineering_londonhousingmap_spark.operators.joins import zip_join
-    from dataengineering_londonhousingmap_spark.operators.util import guard_global_sort
 
     small = spark.range(10).select(Fn.col("id"))
     big = spark.range(500_000_000).select(
@@ -171,7 +170,6 @@ def test_global_sort_guard_refuses_large_inputs(spark):
     )
     with pytest.raises(ValueError, match="SINGLE task"):
         zip_join(big, small, ["id"], ["id"])
-    guard_global_sort(big, "t", allow_large=True)  # explicit override passes
     # dimension-sized inputs pass the guard and join positionally
     assert zip_join(small, small, ["id"], ["id"]).count() == 10
 
@@ -236,9 +234,9 @@ def test_connected_components_transitive(spark):
 
 
 def test_connected_components_long_chain_converges(spark):
-    """A 300-node path graph: diameter 299 >> max_iters, so ONLY the r08
-    pointer-doubling compression (O(log diameter) rounds) converges — plain
-    min-propagation needs 299 rounds and raises. Reverting the compression
+    """A 300-node path graph: diameter 299 >> the 25-iteration bound, so
+    ONLY the r08 pointer-doubling compression (O(log diameter) rounds)
+    converges — plain min-propagation needs 299 rounds and raises. Reverting the compression
     step fails here by design."""
     n = 300
     verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")

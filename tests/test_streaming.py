@@ -125,7 +125,7 @@ def test_sessionize_stream_gap_semantics(spark, tmp_path):
     from dataengineering_londonhousingmap_spark.streaming.incremental import run_stream_to_memory
 
     out = run_stream_to_memory(
-        sessionize_stream(stream, gap_minutes=30), "t_sessions", "append"
+        sessionize_stream(stream), "t_sessions", "append"
     )
     got = {
         (r.user_id, str(r.session_start), r.n_events, r.total_value)
@@ -176,11 +176,11 @@ def test_closed_sessions_keeps_successor_closed_inside_final_horizon(spark, tmp_
     )
     stream = spark.readStream.schema("user_id long, ts timestamp, value double").parquet(src)
     sessions = run_stream_to_memory(
-        sessionize_stream(stream, gap_minutes=30), "t_closed_sessions", "complete"
+        sessionize_stream(stream), "t_closed_sessions", "complete"
     )
     got = {
         (r.user_id, str(r.session_start), str(r.session_end), r.n_events, r.total_value)
-        for r in closed_sessions(sessions, gap_minutes=30).collect()
+        for r in closed_sessions(sessions).collect()
     }
     assert got == {
         (7, "2024-01-01 10:00:00", "2024-01-01 10:10:00", 3, 3.0),
@@ -362,7 +362,7 @@ def test_upsert_sink_applies_cdc_per_partition(spark, tmp_path):
 
 
 def test_upsert_sink_retires_moved_key_rows(spark, tmp_path):
-    """keys_move_partitions: when a key's new latest row lands in a
+    """Moved keys: when a key's new latest row lands in a
     DIFFERENT partition, the stale row in the old partition is retired
     instead of surviving as a duplicate (ADVICE r02)."""
     import pandas as pd
@@ -386,7 +386,6 @@ def test_upsert_sink_retires_moved_key_rows(spark, tmp_path):
         q = start_upsert_sink(
             stream, table, cp,
             key_col="k", partition_col="part", order_col="seq",
-            keys_move_partitions=True,
         )
         q.awaitTermination(60)
 
@@ -413,7 +412,7 @@ def test_upsert_sink_null_partition_rows_are_merged_not_dropped(spark, tmp_path)
     existing NULL-partition rows were skipped from the merge and then
     DROPPED when the dynamic overwrite rewrote that partition with only
     the batch's keys (round-7 audit). Also covers the sorted() TypeError
-    on None-vs-str under keys_move_partitions."""
+    on None-vs-str in the moved-key probe."""
     import pandas as pd
 
     from dataengineering_londonhousingmap_spark.streaming.incremental import (
@@ -437,7 +436,6 @@ def test_upsert_sink_null_partition_rows_are_merged_not_dropped(spark, tmp_path)
         q = start_upsert_sink(
             stream, table, cp,
             key_col="k", partition_col="part", order_col="seq",
-            keys_move_partitions=True,
         )
         q.awaitTermination(60)
 
@@ -507,8 +505,7 @@ def test_late_data_rollup_drop_boundary(spark, tmp_path):
         rows, "event_id long, ts_s string, event_type string, value double"
     ).select("event_id", F.col("ts_s").cast("timestamp").alias("ts"), "event_type", "value")
     out = late_data_rollup(
-        spark, ev, stage_dir=str(tmp_path / "late"), watermark="1 hour",
-        sink_name="t_late_boundary",
+        spark, ev, stage_dir=str(tmp_path / "late"), sink_name="t_late_boundary",
     )
     got = {
         (str(r["window_start"]), r["n"], r["sum_value"]) for r in out.collect()
@@ -627,6 +624,27 @@ def test_cluster_conf_ships_rocksdb_state_store():
     )
 
 
+def test_get_session_checkpoints_through_filesystem_manager(spark, tmp_path):
+    """A get_session session writes stream checkpoints through the
+    FileSystem-based manager. Spark's default FileContext manager checks
+    link status during every rename, and without the native Hadoop library
+    each check spawns a readlink process. cluster_conf keeps the default."""
+    from dataengineering_londonhousingmap_spark.session import cluster_conf
+
+    jvm = spark._jvm
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    mgr = pkg.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(str(tmp_path / "cp")),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    if mgr.getClass().getSimpleName() == "ChecksumCheckpointFileManager":
+        field = mgr.getClass().getDeclaredField("underlyingFileMgr")
+        field.setAccessible(True)
+        mgr = field.get(mgr)
+    assert mgr.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    assert "spark.sql.streaming.checkpointFileManagerClass" not in cluster_conf()
+
+
 def test_is_path_not_found_classifies_structurally(spark, tmp_path):
     """PATH_NOT_FOUND detection must be the AnalysisException's error
     CLASS, not a substring of its rendered message (Spark rewords messages
@@ -678,7 +696,6 @@ def test_upsert_sink_retires_escaped_char_partition_dir(spark, tmp_path):
         q = start_upsert_sink(
             stream, table, cp,
             key_col="k", partition_col="part", order_col="seq",
-            keys_move_partitions=True,
         )
         q.awaitTermination(60)
 
